@@ -17,7 +17,9 @@ object GraftEngine {
 
   /** Execute a dialect query against registered tables. The `FROM` name
     * (conventionally `stream`) keys into `tables`; JOINs resolve lookup
-    * tables from the same map (reference: streamsql.go:490-515 RegisterTable). */
+    * tables from the same map (reference: streamsql.go:490-515 RegisterTable).
+    * A streaming result installs the engine's fork-free local filesystem
+    * for checkpoints on its session ([[graft.streaming.NoForkLocalFs.install]]). */
   def sql(query: String, tables: Map[String, DataFrame]): DataFrame = {
     val stmt = Parser.parseStatement(query)
     val builder = new PlanBuilder(tables)
@@ -45,7 +47,10 @@ object GraftEngine {
       else { flush(); accOp = (part.op, part.all); term = rhs }
     }
     flush()
-    acc.get
+    val out = acc.get
+    if (out.isStreaming)
+      graft.streaming.NoForkLocalFs.install(out.sparkSession)
+    out
   }
 
   /** Convenience: single-stream form. */

@@ -35,12 +35,6 @@ object Bpe {
   /** End-of-word sentinel symbol (kept distinct from any character). */
   val EndOfWord = "</w>"
 
-  /** Learn `numMerges` merges from the corpus. Deterministic: ties on the
-    * pair count break lexicographically on (left, right), so the merge
-    * table reproduces run-over-run and partition-over-partition.
-    *
-    * @param minCount stop early when the best pair occurs fewer times
-    * @return merges in rank order, e.g. `("e","s") :: ("es","t") :: …` */
   /** Pin a vocab-bounded working RDD: explicitly persisted (so the
     * previous round's copy can be FREED — bare localCheckpoint blocks
     * cannot be), lineage truncated (persist alone does NOT — without
@@ -58,25 +52,26 @@ object Bpe {
   }
 
   /** [[pinRdd]] for the standing pair table, with the NEXT round's
-    * arg-max fused into the materializing action: one treeAggregate both
-    * caches the checkpoint blocks and returns the best (count desc, then
+    * arg-max fused into the materializing action: one `RDD.aggregate`
+    * (the table has at most 64 partitions, see [[partsFor]], so a tree
+    * reduction buys nothing) both caches the checkpoint blocks and
+    * returns the best (count desc, then
     * binary-UTF-8 lexicographic (l, r)) pair — the tie-break is
     * [[UTF8String]].compareTo, bit-identical to the DataFrame
     * `orderBy(n desc, l, r)` this replaces, so the learned table is
     * unchanged while the separate per-round top-1 job (plus its Catalyst
     * plan) disappears. */
   private def pinPairs(rdd: RDD[((String, String), Long)])
-      : (RDD[((String, String), Long)], Option[((String, String), Long)]) = {
+      : Option[((String, String), Long)] = {
     rdd.persist(StorageLevel.MEMORY_AND_DISK)
     rdd.localCheckpoint()
-    val best = rdd.aggregate(Option.empty[((String, String), Long)])(
+    rdd.aggregate(Option.empty[((String, String), Long)])(
       (acc, x) => Some(acc.fold(x)(betterPair(_, x))),
       (a, b) => (a, b) match {
         case (Some(x), Some(y)) => Some(betterPair(x, y))
         case (None, y) => y
         case (x, None) => x
       })
-    (rdd, best)
   }
 
   /** The winner under (count desc, UTF8-binary l, UTF8-binary r) — the
@@ -137,6 +132,12 @@ object Bpe {
   private def partsFor(rows: Long): Int =
     math.max(1L, math.min(64L, rows / 100000L)).toInt
 
+  /** Learn `numMerges` merges from the corpus. Deterministic: ties on the
+    * pair count break lexicographically on (left, right), so the merge
+    * table reproduces run-over-run and partition-over-partition.
+    *
+    * @param minCount stop early when the best pair occurs fewer times
+    * @return merges in rank order, e.g. `("e","s") :: ("es","t") :: …` */
   def trainMerges(
       docs: DataFrame,
       numMerges: Int,
@@ -194,9 +195,13 @@ object Bpe {
     // standing pair counts — built ONCE by full aggregation, then patched
     // with per-merge deltas (exact integer sums: commutative, so the
     // reduceByKey order is immaterial)
-    var (pairsRdd, best) = pinPairs(dictRdd
+    var pairsRdd = dictRdd
       .flatMap { case (s, c) => adjArr(s).map(p => (p, c)) }
-      .reduceByKey(_ + _, dictParts))
+      .reduceByKey(_ + _, dictParts)
+    // the round in flight; released with the standing tables in the
+    // finally below, so a round that throws leaks no cached blocks
+    var newDict: RDD[(Array[String], Long)] = null
+    var newPairs: RDD[((String, String), Long)] = null
     val merges = scala.collection.mutable.ArrayBuffer[(String, String)]()
     var round = 0
     var done = false
@@ -208,43 +213,50 @@ object Bpe {
     val sc = docs.sparkSession.sparkContext
     val ckptAll = "spark.checkpoint.checkpointAllMarkedAncestors"
     val prevCkptAll = sc.getLocalProperty(ckptAll)
-    sc.setLocalProperty(ckptAll, "true")
-    try while (round < numMerges && !done) {
-      best match {
-        // deterministic top pair: count, then binary-lexicographic (l, r)
-        case None => done = true
-        case Some((_, n)) if n < minCount => done = true
-        case Some(((l, r), _)) =>
-          merges += ((l, r))
-          val newDict = dictRdd.map { case (s, c) =>
-            (if (hasPairArr(s, l, r)) mergeOnceArr(s, l, r) else s, c)
-          }
-          newDict.persist(StorageLevel.MEMORY_AND_DISK)
-          newDict.localCheckpoint()
-          // exact count deltas from the affected words alone: debit every
-          // old adjacency, credit every new one (multiplicities included —
-          // the reduceByKey sums them). Routed THROUGH the persisted
-          // newDict (zipped with the old dict — map preserves partition
-          // count and row order, so the zip is positional identity): the
-          // one pairs-materializing job then also computes and caches
-          // every newDict block and finalizes its checkpoint, so a round
-          // costs ONE tiny job, not three.
-          val deltas = newDict.zipPartitions(dictRdd) { (nIt, oIt) =>
-            nIt.zip(oIt).flatMap { case ((ns, _), (s, c)) =>
-              if (!hasPairArr(s, l, r)) Iterator.empty
-              else adjArr(s).map(p => (p, -c)) ++ adjArr(ns).map(p => (p, c))
+    var best = Option.empty[((String, String), Long)]
+    try {
+      best = pinPairs(pairsRdd)
+      sc.setLocalProperty(ckptAll, "true")
+      while (round < numMerges && !done) {
+        best match {
+          // deterministic top pair: count, then binary-lexicographic (l, r)
+          case None => done = true
+          case Some((_, n)) if n < minCount => done = true
+          case Some(((l, r), _)) =>
+            merges += ((l, r))
+            newDict = dictRdd.map { case (s, c) =>
+              (if (hasPairArr(s, l, r)) mergeOnceArr(s, l, r) else s, c)
             }
-          }
-          val (newPairsRdd, newBest) = pinPairs(pairsRdd.union(deltas)
-            .reduceByKey(_ + _, dictParts)
-            .filter(_._2 > 0))
-          pairsRdd.unpersist(false); dictRdd.unpersist(false)
-          pairsRdd = newPairsRdd; best = newBest
-          dictRdd = newDict
-          round += 1
+            newDict.persist(StorageLevel.MEMORY_AND_DISK)
+            newDict.localCheckpoint()
+            // exact count deltas from the affected words alone: debit every
+            // old adjacency, credit every new one (multiplicities included —
+            // the reduceByKey sums them). Routed THROUGH the persisted
+            // newDict (zipped with the old dict — map preserves partition
+            // count and row order, so the zip is positional identity): the
+            // one pairs-materializing job then also computes and caches
+            // every newDict block and finalizes its checkpoint, so a round
+            // costs ONE tiny job, not three.
+            val deltas = newDict.zipPartitions(dictRdd) { (nIt, oIt) =>
+              nIt.zip(oIt).flatMap { case ((ns, _), (s, c)) =>
+                if (!hasPairArr(s, l, r)) Iterator.empty
+                else adjArr(s).map(p => (p, -c)) ++ adjArr(ns).map(p => (p, c))
+              }
+            }
+            newPairs = pairsRdd.union(deltas)
+              .reduceByKey(_ + _, dictParts)
+              .filter(_._2 > 0)
+            best = pinPairs(newPairs)
+            pairsRdd.unpersist(false); dictRdd.unpersist(false)
+            pairsRdd = newPairs; dictRdd = newDict
+            round += 1
+        }
       }
-    } finally sc.setLocalProperty(ckptAll, prevCkptAll)
-    pairsRdd.unpersist(false); dictRdd.unpersist(false)
+    } finally {
+      sc.setLocalProperty(ckptAll, prevCkptAll)
+      Seq(pairsRdd, dictRdd, newPairs, newDict)
+        .filter(_ != null).foreach(_.unpersist(false))
+    }
     merges.toSeq
   }
 

@@ -397,8 +397,9 @@ object Dedup {
       maxBucket: Int = 100000): DataFrame = {
     val pairs = minHashPairsAgainst(newDocs, corpus, textCol, idCol,
       shingleN, bands, rows, threshold, maxBucket)
-    val drop = materializeAndRelease(
-      pairs.select(col("doc_new")).distinct(), pairs)
+    // at most one id per new document: the components' default bound
+    val drop = holdDropSet(pairs.select(col("doc_new")).distinct(),
+      1000000L, () => pairs.unpersist(false))
     newDocs.join(drop, newDocs(idCol) === drop("doc_new"), "left_anti")
   }
 
@@ -434,15 +435,17 @@ object Dedup {
       ccLocalThreshold: Long = 1000000L): DataFrame = {
     val sigs = minHashSignatures(newDocs, textCol, idCol, shingleN,
       bands, rows).persist()
-    val corpusHit = minHashPairsAgainstSignatures(sigs, corpusSigs,
-        bands = bands, rows = rows, threshold = threshold,
-        maxBucket = maxBucket)
-      .select(col("doc_new")).distinct().persist()
+    val corpusPairs = minHashPairsAgainstSignatures(sigs, corpusSigs,
+      bands = bands, rows = rows, threshold = threshold,
+      maxBucket = maxBucket)
+    val corpusHit = corpusPairs.select(col("doc_new")).distinct().persist()
     corpusHit.count()
+    corpusPairs.unpersist(false)
     val within = minHashPairsFromSignatures(sigs, bands = bands,
       rows = rows, threshold = threshold, maxBucket = maxBucket)
-    val comp = connectedComponents(within, maxIter = ccMaxIter,
-      localThreshold = ccLocalThreshold).persist()
+    val (labels, releaseLabels) = components(within, "doc_a", "doc_b",
+      ccMaxIter, ccLocalThreshold)
+    val comp = labels.persist()
     val contaminatedComps = comp
       .join(corpusHit, comp("doc_id") === corpusHit("doc_new"))
       .select(col("comp")).distinct()
@@ -450,11 +453,14 @@ object Dedup {
       .select(col("doc_id").as("__drop"))
     val nonCanonical = comp.filter(col("doc_id") =!= col("comp"))
       .select(col("doc_id").as("__drop"))
-    val drop = materializeAndRelease(
+    val drop = holdDropSet(
       contaminated.unionByName(nonCanonical)
         .unionByName(corpusHit.select(col("doc_new").as("__drop")))
         .distinct(),
-      comp, corpusHit, sigs)
+      ccLocalThreshold, () => {
+        Seq(comp, corpusHit, sigs, within).foreach(_.unpersist(false))
+        releaseLabels()
+      })
     newDocs.join(drop, newDocs(idCol) === drop("__drop"), "left_anti")
   }
 
@@ -520,6 +526,37 @@ object Dedup {
     m
   }
 
+  /** The drop set of a keep-style operator ([[keepCanonical]],
+    * [[keepBest]], [[keepNewAgainst]], [[keepNewAgainstSignatures]]),
+    * computed once so the final anti-join does not recompute it, and held
+    * outside the session's cache manager, which would pin it long after
+    * the caller consumed the result (nothing could unpersist it then).
+    *
+    * It is computed into a local checkpoint and counted. A set of at most
+    * `maxLocalRows` rows, or small enough that the session would broadcast
+    * it anyway, comes to the driver as a local relation (exact size
+    * statistics, so it still broadcasts) and its checkpoint blocks are
+    * freed at once: the same driver bound as the union-find path of
+    * [[connectedComponents]] or a broadcast. A larger set stays
+    * distributed in the checkpoint, whose blocks the ContextCleaner reaps
+    * once the result is unreachable. `release` frees what the set was
+    * read from, once it is held. */
+  private def holdDropSet(drop: DataFrame, maxLocalRows: Long,
+      release: () => Unit): DataFrame = {
+    val held = try drop.localCheckpoint() finally release()
+    val broadcastRows = drop.sparkSession.sessionState.conf.autoBroadcastJoinThreshold /
+      (8L + drop.schema.defaultSize)
+    if (held.count() > math.max(maxLocalRows, broadcastRows)) held
+    else {
+      val rows = held.collect()
+      held.queryExecution.logical.foreach {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(false)
+        case _ =>
+      }
+      drop.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), drop.schema)
+    }
+  }
+
   /** Connected components over a near-dup pair set → (doc_id, comp), where
     * `comp` is the smallest id reachable from the node (canonical cluster
     * label). This is the step a dedup pipeline needs AFTER pair generation:
@@ -540,7 +577,18 @@ object Dedup {
       aCol: String = "doc_a",
       bCol: String = "doc_b",
       maxIter: Int = 20,
-      localThreshold: Long = 1000000L): DataFrame = {
+      localThreshold: Long = 1000000L): DataFrame =
+    components(pairs, aCol, bCol, maxIter, localThreshold)._1
+
+  /** [[connectedComponents]] plus a release of what its result still
+    * holds cached (the long-id loop's final label blocks) — to be called
+    * once the labels have been read. */
+  private def components(
+      pairs: DataFrame,
+      aCol: String,
+      bCol: String,
+      maxIter: Int,
+      localThreshold: Long): (DataFrame, () => Unit) = {
     val e0 = pairs.select(col(aCol).as("src"), col(bCol).as("dst")).persist()
     // near-dup pair graphs are usually tiny relative to the corpus (only
     // dup docs appear); below the threshold a driver union-find costs one
@@ -576,8 +624,8 @@ object Dedup {
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("doc_id", dt),
         org.apache.spark.sql.types.StructField("comp", dt)))
-      return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), schema)
+      return (spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 1), schema), () => ())
     }
     // LongType ids (every in-repo caller) take the co-partitioned RDD
     // loop (r15): one shuffle per round instead of three — see
@@ -588,9 +636,9 @@ object Dedup {
         pairs.schema(bCol).dataType ==
           org.apache.spark.sql.types.LongType &&
         e0.filter(col("src").isNull || col("dst").isNull).isEmpty) {
-      val out = connectedComponentsRddLong(e0, maxIter, nEdges)
+      val (out, labels) = connectedComponentsRddLong(e0, maxIter, nEdges)
       e0.unpersist(false)
-      return out
+      return (out, () => labels.unpersist(false))
     }
     // Each round references the previous labels TWICE (propagation join +
     // union), so a persist()-based loop — which caches data but keeps the
@@ -633,7 +681,7 @@ object Dedup {
       labels = next.drop("__chg")
       iter += 1
     }
-    labels.withColumnRenamed("id", "doc_id")
+    (labels.withColumnRenamed("id", "doc_id"), () => ())
   }
 
   /** The long-id distributed CC loop (r15, guide §2.4 "remove shuffles
@@ -656,11 +704,14 @@ object Dedup {
     * Partition count is scale-adaptive: directed-edge count / ~2M rows
     * per partition (≈32 MB of (long,long) entries), floored at the
     * session shuffle setting, capped at 4096 — the same sizing contract
-    * as [[graft.operators.TextOps.fanoutParts]]. */
+    * as [[graft.operators.TextOps.fanoutParts]].
+    *
+    * Returns the labels and the persisted RDD they are read from, for the
+    * caller to release once it has read them. */
   private def connectedComponentsRddLong(
       e0: DataFrame,
       maxIter: Int,
-      nEdges: Long): DataFrame = {
+      nEdges: Long): (DataFrame, org.apache.spark.rdd.RDD[_]) = {
     val spark = e0.sparkSession
     val session = spark.sessionState.conf.numShufflePartitions
     val nParts = math.max(session.toLong,
@@ -724,10 +775,7 @@ object Dedup {
     // to the (recomputable) lineage, so releasing them early is safe
     edges.unpersist(false)
     import spark.implicits._
-    labels.toDF("doc_id", "comp")
-    // remaining label blocks are reaped by the caller-side
-    // materializeAndRelease pattern (keepCanonical/keepBest) or the
-    // ContextCleaner once the result is consumed
+    (labels.toDF("doc_id", "comp"), persisted)
   }
 
   /** Near-dup cluster audit: the size histogram of the connected
@@ -763,11 +811,10 @@ object Dedup {
       bCol: String = "doc_b",
       maxIter: Int = 20,
       localThreshold: Long = 1000000L): DataFrame = {
-    val cc = connectedComponents(pairs, aCol, bCol, maxIter, localThreshold)
-    // materialize the (small) drop set, then release the label cache —
-    // the anti-join must not recompute the whole propagation
-    val drop = materializeAndRelease(
-      cc.filter(col("doc_id") =!= col("comp")).select(col("doc_id")), cc)
+    val (cc, release) = components(pairs, aCol, bCol, maxIter, localThreshold)
+    val drop = holdDropSet(
+      cc.filter(col("doc_id") =!= col("comp")).select(col("doc_id")),
+      localThreshold, release)
     docs.join(drop, docs(idCol) === drop("doc_id"), "left_anti")
   }
 
@@ -790,7 +837,7 @@ object Dedup {
       bCol: String = "doc_b",
       maxIter: Int = 20,
       localThreshold: Long = 1000000L): DataFrame = {
-    val cc = connectedComponents(pairs, aCol, bCol, maxIter, localThreshold)
+    val (cc, release) = components(pairs, aCol, bCol, maxIter, localThreshold)
     // winner per cluster: highest score, then lowest id (max_by on a
     // (score, -id) struct is a single hash aggregation)
     val scored = cc.join(
@@ -798,11 +845,11 @@ object Dedup {
     val winners = scored.groupBy(col("comp"))
       .agg(max_by(col("doc_id"),
         struct(col("__score"), (-col("doc_id")).as("__negid"))).as("__keep"))
-    val drop = materializeAndRelease(
+    val drop = holdDropSet(
       scored.join(winners, Seq("comp"))
         .filter(col("doc_id") =!= col("__keep"))
         .select(col("doc_id")),
-      cc)
+      localThreshold, release)
     docs.join(drop, docs(idCol) === drop("doc_id"), "left_anti")
   }
 

@@ -29,11 +29,20 @@ object Sinks {
       f(b, id)
     }
 
-  /** Callback sink: the Spark analog of AddSink(fn). */
+  /** Callback sink: the Spark analog of AddSink(fn). The `foreachBatch`
+    * sink reports no output row count in its progress, so the rows handed
+    * to `f` are counted here, on the stream thread, for
+    * [[StreamMetrics]]' `output_count`. */
   def addSink(df: DataFrame)(f: Seq[Row] => Unit): DataStreamWriter[Row] =
     df.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      f(batch.collect().toSeq)
+      val rows = batch.collect().toSeq
+      f(rows)
+      StreamMetrics.countSinkRows(
+        batch.sparkSession.sparkContext.getLocalProperty(QueryIdKey), rows.size)
     }
+
+  /** Local property Spark sets on a query's stream thread to its id. */
+  private val QueryIdKey = "sql.streaming.queryId"
 
   /** In-memory queryable sink (ToChannel analog) — returns the started
     * query; results accumulate in the named temp view. */

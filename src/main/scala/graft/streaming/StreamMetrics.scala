@@ -1,6 +1,7 @@
 package graft.streaming
 
 import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.LongAdder
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
 
@@ -15,7 +16,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
   * [[StreamingQueryListener]] — no hooks in the data path, zero per-row
   * cost. Ingestion drop counts (schema-invalid rows,
   * [[graft.sources.Ingest]]) arrive through the same progress events as
-  * observed metrics and fold into `dropped_count`.
+  * observed metrics and fold into `dropped_count`. Rows delivered through
+  * [[Sinks.addSink]], whose sink reports no row count, are counted by the
+  * sink itself and fold into `output_count`.
   *
   * Listener callbacks are async; call [[StreamingQuery.processAllAvailable]]
   * (or wait for a progress event) before reading exact totals.
@@ -60,7 +63,8 @@ final class StreamMetrics private (spark: SparkSession) {
 
   /** Stats for one query (zeros before its first progress event). */
   def stats(q: StreamingQuery): QueryStats =
-    Option(totals.get(q.id)).getOrElse(QueryStats(0, 0, 0, 0, 0, 0.0))
+    StreamMetrics.withSinkRows(q.id,
+      Option(totals.get(q.id)).getOrElse(QueryStats(0, 0, 0, 0, 0, 0.0)))
 
   /** GetStats analog: reference-keyed map. */
   def getStats(q: StreamingQuery): Map[String, Any] = stats(q).asMap
@@ -68,7 +72,7 @@ final class StreamMetrics private (spark: SparkSession) {
   /** Drop tracking for the session (all queries). */
   def allStats: Map[java.util.UUID, QueryStats] = {
     import scala.jdk.CollectionConverters._
-    totals.asScala.toMap
+    totals.asScala.toMap.map { case (id, s) => id -> StreamMetrics.withSinkRows(id, s) }
   }
 
   def close(): Unit = {
@@ -99,6 +103,19 @@ object StreamMetrics {
   }
 
   private val perSession = new ConcurrentHashMap[SparkSession, StreamMetrics]()
+
+  /** Rows delivered by [[Sinks.addSink]] callbacks, by query id. Its
+    * `foreachBatch` sink reports no `numOutputRows`, so these counts are
+    * what `outputCount` holds for such queries. Counted synchronously on
+    * the stream thread: exact once `processAllAvailable` returns. */
+  private val sinkRows = new ConcurrentHashMap[java.util.UUID, LongAdder]()
+
+  private[streaming] def countSinkRows(queryId: String, n: Long): Unit =
+    if (queryId != null)
+      sinkRows.computeIfAbsent(java.util.UUID.fromString(queryId), _ => new LongAdder).add(n)
+
+  private def withSinkRows(id: java.util.UUID, s: QueryStats): QueryStats =
+    Option(sinkRows.get(id)).fold(s)(n => s.copy(outputCount = s.outputCount + n.sum))
 
   /** One listener per session, created on first use. */
   def apply(spark: SparkSession): StreamMetrics =

@@ -244,6 +244,65 @@ class OperatorsSpec extends AnyFunSuite {
     assert(kept.toSeq == Seq(1L, 9L))
   }
 
+  /** The RDDs still persisted after `body`, of those it added. Compared
+    * by id: the ContextCleaner may reap earlier tests' blocks meanwhile,
+    * so only what `body` adds and keeps counts. */
+  private def persistedBy(body: => Unit): Map[Int, String] = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    body
+    (sc.getPersistentRDDs.toMap -- before).map { case (id, r) => id -> r.toDebugString }
+  }
+
+  test("a distributed-path curate leaves no persisted RDD behind once consumed") {
+    val left = persistedBy {
+      val kept = Curation.curate(docs, ccLocalThreshold = 0L).select("doc_id").collect()
+      assert(kept.nonEmpty)
+    }
+    assert(left.isEmpty, left)
+  }
+
+  test("the ingest keep operators leave no persisted RDD behind once consumed") {
+    val batch = docs.select("doc_id", "text")
+    val corpus = batch.filter(col("doc_id") % 2 === 0)
+    val corpusSigs = Dedup.minHashSignatures(corpus)
+    for (threshold <- Seq(0L, 1000000L)) {
+      val left = persistedBy {
+        Dedup.keepNewAgainstSignatures(batch, corpusSigs, ccLocalThreshold = threshold)
+          .collect()
+      }
+      assert(left.isEmpty, s"ccLocalThreshold=$threshold: $left")
+    }
+    val left = persistedBy(Dedup.keepNewAgainst(batch, corpus).collect())
+    assert(left.isEmpty, left)
+  }
+
+  test("a drop set past both driver bounds stays distributed, and its blocks " +
+      "are reaped once the result is unreachable") {
+    def run(): (Set[Long], Seq[String]) = {
+      val kept = Curation.curate(docs, ccLocalThreshold = 0L)
+      (kept.select("doc_id").collect().map(_.getLong(0)).toSet,
+        kept.queryExecution.optimizedPlan.collectLeaves().map(_.nodeName))
+    }
+    val (local, localLeaves) = run()
+    assert(localLeaves.contains("LocalRelation"), localLeaves)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    // no broadcast either: the drop set fits neither local bound
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    val (dist, distLeaves) = try run() finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(dist == local)
+    assert(distLeaves.contains("LogicalRDD") && !distLeaves.contains("LocalRelation"), distLeaves)
+    // at most the checkpointed drop set is left, for the ContextCleaner
+    def left = sc.getPersistentRDDs.keySet.toSet -- before
+    assert(left.size <= 1, left)
+    val deadline = System.nanoTime + 30L * 1000000000L
+    while (left.nonEmpty && System.nanoTime < deadline) { System.gc(); Thread.sleep(200) }
+    assert(left.isEmpty, left)
+  }
+
   test("bucketPairs matches a reference pair enumeration on random inputs") {
     // differential pin for the one-shuffle candidate generation that
     // replaced the banded self-join: same (key, id) multiset in -> same

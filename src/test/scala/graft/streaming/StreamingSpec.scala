@@ -666,6 +666,24 @@ class StreamingSpec extends AnyFunSuite {
     assert(seen.filter(_.nonEmpty).toSeq == Seq(Seq(9.0, 7.0), Seq(3.0, 1.0)))
   }
 
+  test("StreamMetrics output_count counts the rows an addSink callback receives") {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[Ev]
+    val ss = graft.api.StreamSql(spark).registerTable("stream", mem.toDF())
+    val metrics = ss.metrics
+    val out = ss.execute("SELECT deviceId, temperature FROM stream WHERE temperature > 2")
+    val received = new java.util.concurrent.atomic.AtomicLong
+    val q = ss.addSink(out)(rows => { received.addAndGet(rows.size); () }).start()
+    mem.addData((1 to 5).map(i => Ev("d1", i, i, "a")): _*)
+    q.processAllAvailable()
+    mem.addData((6 to 9).map(i => Ev("d2", i, i, "a")): _*)
+    q.processAllAvailable()
+    SparkTestBase.stopQuietly(q)
+    assert(received.get == 7L)
+    assert(metrics.stats(q).outputCount == received.get)
+    assert(metrics.getStats(q)("output_count") == 7L)
+  }
+
   test("streaming exact dedup drops cross-batch dups; state expires with the watermark") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(Long, String, Long)]
