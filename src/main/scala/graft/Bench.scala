@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Benchmark main — prints a compact headline JSON as the FINAL stdout
   * line (driver contract: the driver tail-captures ~2 kB, so the
   * per-query map must NOT ride on that line) and writes the full
-  * per-query map to `bench_full_r14.json` in the repo for cross-round
+  * per-query map to `bench_full_r15.json` in the repo for cross-round
   * diffing. Rule-shape rows/s compares against the reference's three
   * published shapes (BASELINE.md: filter / transform / analytic+
   * partition, reference: test/e2e/stress_test.go:162-176).

@@ -1,14 +1,21 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.v2.V2TableWriteExec
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Optimization-round measurement harness: dump `.explain("formatted")`
   * for named SparkEntry queries to `plans/<tag>/<query>_<suffix>.txt`,
   * optionally timing each query through the noop sink (min of N draws
   * after one warm-up — the same one-sided-noise aggregation the bench
-  * uses).
+  * uses). A timed query also gets `<query>_<suffix>_final.txt`: the
+  * post-AQE executed plan of its last draw, the only place runtime
+  * exchange and stage reuse and the coalesced partition counts show
+  * (the formatted plan is captured before execution).
   *
   * Usage:
   *   sbt "runMain graft.PlanDump <sfDir> <outDir> <suffix> <q1,q2,...|all> [timedPasses]"
@@ -42,6 +49,15 @@ object PlanDump {
       if (names == "all") qmap.keys.toSeq.sorted
       else names.split(",").toSeq
     val times = scala.collection.mutable.LinkedHashMap[String, Double]()
+    // executed plans of the noop writes, in order; listener events arrive
+    // on the listener-bus thread, so the main thread takes them from here
+    val writePlans = new LinkedBlockingQueue[String]()
+    spark.listenerManager.register(new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.executedPlan.isInstanceOf[V2TableWriteExec])
+          writePlans.put(qe.executedPlan.toString)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    })
     selected.foreach { name =>
       qmap.get(name) match {
         case None => System.err.println(s"[plandump] unknown query: $name")
@@ -59,8 +75,14 @@ object PlanDump {
                 fn(spark, sfDir).write.format("noop").mode("overwrite").save()
                 (System.nanoTime() - t0) / 1e9
               }
+              writePlans.clear()
               once() // warm-up draw (JIT, codegen cache, page cache)
               times(name) = Seq.fill(passes)(once()).min
+              val drawPlans = Iterator.fill(passes + 1)(
+                writePlans.poll(60, TimeUnit.SECONDS)).takeWhile(_ != null).toSeq
+              if (drawPlans.size == passes + 1)
+                Files.writeString(Paths.get(s"$outDir/${name}_${suffix}_final.txt"), drawPlans.last)
+              else System.err.println(s"[plandump] $name: final plan not reported")
             }
           } catch {
             case e: Throwable =>

@@ -274,7 +274,8 @@ object Similarity {
     * cluster structure, recall is bounded by the scanned fraction, so a
     * high-recall default must probe most cells; clustered real embeddings
     * concentrate neighbors in few cells and reach the same recall at much
-    * smaller nprobe/nlist. `graft.AnnTune` prints the measured grid.
+    * smaller nprobe/nlist. `graft.Bench` reports this recall as
+    * `ann_recall.ivf_recall_at_10`; OperatorsSpec pins its 0.8 floor.
     *
     * Output: (query_id, vec_id, sim, rank) — rank 1..k per query. */
   def topKIvf(
@@ -538,7 +539,9 @@ object Similarity {
     * lower fraction, because near neighbors collide with much higher
     * probability than random pairs while the random-collision rate stays
     * fixed. Lower chunks (or raise planesN) for cheaper, lower-recall
-    * searches; `graft.AnnTune` prints the measured grid. */
+    * searches. `graft.Bench` reports this recall as
+    * `ann_recall.bucketed_recall_at_10`; OperatorsSpec pins its 0.8
+    * floor. */
   def topKBucketed(
       corpus: DataFrame,
       queries: DataFrame,

@@ -1200,29 +1200,16 @@ object TextOps {
     require(n >= 1, "n must be positive")
     require(parts >= 0, "parts must be non-negative (0 = size to input volume)")
     // r15 shape decision, MEASURED (SpanShapeTune @ 2M synth docs,
-    // interleaved min-of-2): the hash-aggregation alternative
-    // ([[dupSpansAgg]] — count per hash + shuffled-hash join instead of
-    // the window sort) loses 9.8 s vs 17.2 s because column pruning
-    // splits its two hash exchanges (no reuse → the gram kernel and the
-    // fan-out shuffle both run twice) while the window's per-partition
-    // sort is bounded by the fan-out sizing and is NOT the bottleneck.
-    // The window formulation stays at every scale; the agg shape is kept
-    // (parity-pinned in OperatorsSpec) as the measured-and-rejected
-    // reference.
+    // interleaved min-of-2; see OPTIMIZATION_r15.md): the hash-aggregation
+    // alternative (count per hash + shuffled-hash join instead of the
+    // window sort) lost 9.8 s vs 17.2 s because column pruning splits its
+    // two hash exchanges (no reuse → the gram kernel and the fan-out
+    // shuffle both run twice) while the window's per-partition sort is
+    // bounded by the fan-out sizing and is NOT the bottleneck. The window
+    // formulation (2 shuffles: hash window + per-doc rollup, no join)
+    // stays at every scale; the agg shape was deleted.
     val windowParts =
       if (parts > 0) parts else fanoutParts(docs, textCol)
-    dupSpansWindow(docs, n, textCol, idCol, windowParts)
-  }
-
-  /** The pre-r15 window formulation of [[dupSpans]] — the small-volume
-    * plan (2 shuffles: hash window + per-doc rollup, no join) and the
-    * spec-pinned reference the aggregation shape must reproduce. */
-  private[graft] def dupSpansWindow(
-      docs: DataFrame,
-      n: Int,
-      textCol: String,
-      idCol: String,
-      windowParts: Int): DataFrame = {
     // window hashes come fused from the scan (one xxhash64 per window
     // over the normalized bytes, r15): no per-gram substring
     // materialization, no md5 — the hash is internal, the oracles group
@@ -1261,52 +1248,6 @@ object TextOps {
         round(col("dup_spans") / col("spans"), 6).as("dup_frac"))
   }
 
-  /** The at-scale formulation of [[dupSpans]] (r15, guide §2.3/§2.4):
-    * same output, different plan. The window plan pays (a) an external
-    * SORT of the whole (id, hash) fan-out inside every shuffle partition
-    * (windows require sorted clusters) and (b) a SECOND full-width
-    * exchange for the per-doc rollup (after hash-partitioning by hash,
-    * a doc's grams are scattered, so the map-side partial aggregation
-    * reduces nothing). Here instead:
-    *
-    *   - `spans` never shuffles at all: shingles are distinct per doc,
-    *     so the per-doc window count is a PER-ROW expression
-    *     (`size` of the non-empty shingles) computed at the scan;
-    *   - ONE fan-out-sized exchange of the slim (id, hash) rows feeds a
-    *     hash aggregation (`count` per hash — no sort) AND, via exchange
-    *     reuse, the probe side of a shuffled-hash join against the
-    *     (filtered, duplicated-only) counts — so only gram rows that ARE
-    *     duplicated reach the per-doc rollup exchange, typically a small
-    *     fraction of the corpus;
-    *   - the final per-doc attach joins doc-cardinality rows only.
-    *
-    * Exactness: the inner join keeps exactly the grams with count > 1 —
-    * the rows the window plan counted via `when(__docs > 1, 1)`. */
-  private[graft] def dupSpansAgg(
-      docs: DataFrame,
-      n: Int,
-      textCol: String,
-      idCol: String,
-      windowParts: Int): DataFrame = {
-    val shArr = graft.functions.TextKernels.spanHashesDistinctCol(
-      normalize(col(textCol)), n)
-    val grams = docs.select(col(idCol).as("__id"), explode(shArr).as("__h"))
-    val sized = grams.repartition(windowParts, col("__h"))
-    val dupHashes = sized.groupBy(col("__h"))
-      .agg(count(lit(1)).as("__docs"))
-      .filter(col("__docs") > 1)
-    val dupPerDoc = sized.join(dupHashes.hint("shuffle_hash"), Seq("__h"))
-      .groupBy(col("__id"))
-      .agg(count(lit(1)).as("__dup"))
-    val spans = docs.select(col(idCol).as("__id"),
-        size(shArr).cast("long").as("spans"))
-      .filter(col("spans") > 0)
-    spans.join(dupPerDoc, Seq("__id"), "left")
-      .select(col("__id").as(idCol), col("spans"),
-        coalesce(col("__dup"), lit(0L)).as("dup_spans"),
-        round(coalesce(col("__dup"), lit(0L)) / col("spans"), 6).as("dup_frac"))
-  }
-
   /** Cross-document duplicated-span REMOVAL — the acting half of
     * [[dupSpans]] (Lee et al. 2022 remove the repeated substrings, not the
     * documents): every `n`-word window occurring 2+ times in the corpus
@@ -1341,39 +1282,15 @@ object TextOps {
     require(n >= 1, "n must be positive")
     require(parts >= 0, "parts must be non-negative (0 = size to input volume)")
     // r15 shape decision, MEASURED (SpanShapeTune @ 2M synth docs,
-    // interleaved min-of-2): the hash-aggregation alternative
-    // ([[removeDupSpansAgg]] — decimal-packed first-occurrence election
-    // in a HashAggregate + shuffled-hash joins, zero sorts) only TIES the
+    // interleaved min-of-2; see OPTIMIZATION_r15.md): the hash-aggregation
+    // alternative (decimal-packed first-occurrence election in a
+    // HashAggregate + shuffled-hash joins, zero sorts) only TIED the
     // window shape (12.4 vs 12.6 s) because pruning-split exchanges run
     // the gram kernel twice; the window formulation stays (simpler plan,
-    // same speed). The agg shape is kept parity-pinned as the reference.
+    // same speed) and the agg shape was deleted.
     val windowParts =
       if (parts > 0) parts else fanoutParts(docs, textCol)
-    removeDupSpansWindow(docs, n, textCol, idCol, windowParts)
-  }
-
-  /** (id asc, pos asc)-isomorphic packing of one occurrence into a single
-    * decimal(38,0): `id · 2³² + pos`. Monotone because pos ∈ [0, 2³¹):
-    * for id₁ < id₂, id₁·2³² + pos₁ < (id₁+1)·2³² ≤ id₂·2³² + pos₂ —
-    * negative ids included (decimal arithmetic is exact; precision ≤ 31
-    * digits, no overflow). The point: the lexicographic first-occurrence
-    * election becomes `min` over a decimal — a mutable UnsafeRow buffer
-    * type, so the aggregation stays in HashAggregateExec — where
-    * `min(struct(id, pos))` forces the object-hash path, whose sort-based
-    * fallback would reintroduce the very sort this shape removes. */
-  private def packedOcc(id: Column, pos: Column): Column =
-    id.cast(org.apache.spark.sql.types.DecimalType(38, 0)) *
-      lit(4294967296L) + pos
-
-  /** The pre-r15 window formulation of [[removeDupSpans]] — small-volume
-    * plan and spec-pinned reference for [[removeDupSpansAgg]]. */
-  private[graft] def removeDupSpansWindow(
-      docs: DataFrame,
-      n: Int,
-      textCol: String,
-      idCol: String,
-      windowParts: Int): DataFrame = {
-    // fused window hashing at the scan — see dupSpansWindow (r15)
+    // fused window hashing at the scan — see dupSpans (r15)
     val occ = docs.select(col(idCol).as("__id"),
         posexplode(graft.functions.TextKernels.spanHashesCol(
           normalize(col(textCol)), n)).as(Seq("__p", "__h")))
@@ -1417,41 +1334,6 @@ object TextOps {
       .select(col(idCol), col("__rs.clean_text").as("clean_text"),
         col("__rs.n_words").as("n_words"),
         col("__rs.n_removed").as("n_removed"))
-  }
-
-  /** The at-scale formulation of [[removeDupSpans]] (r15, guide §2.3/§3):
-    * same output, no corpus-global sort. The window plan sorts the whole
-    * (id, pos, hash) fan-out by hash inside every shuffle partition; here
-    * ONE fan-out-sized exchange feeds a hash aggregation — per-hash
-    * occurrence count plus the packed first occurrence ([[packedOcc]]),
-    * both HashAggregate-able buffers — filtered to the duplicated hashes
-    * only, and exchange reuse feeds the same shuffled rows to the probe
-    * side of a shuffled-hash join against that (small) election table.
-    * Non-first occurrences of duplicated windows — exactly the window
-    * plan's removal set — then roll up per doc and rebuild the text
-    * exactly as before. */
-  private[graft] def removeDupSpansAgg(
-      docs: DataFrame,
-      n: Int,
-      textCol: String,
-      idCol: String,
-      windowParts: Int): DataFrame = {
-    val occ = docs.select(col(idCol).as("__id"),
-        posexplode(graft.functions.TextKernels.spanHashesCol(
-          normalize(col(textCol)), n)).as(Seq("__p", "__h")))
-    val sized = occ.repartition(windowParts, col("__h"))
-    val dupFirst = sized.groupBy(col("__h"))
-      .agg(count(lit(1)).as("__occ"),
-        min(packedOcc(col("__id"), col("__p"))).as("__firstP"))
-      .filter(col("__occ") > 1)
-      .select(col("__h"), col("__firstP"))
-    val removals = sized
-      .join(dupFirst.hint("shuffle_hash"), Seq("__h"))
-      .filter(packedOcc(col("__id"), col("__p")) =!= col("__firstP"))
-      .groupBy(col("__id"))
-      .agg(collect_list(col("__p")).as("__starts"))
-      .withColumnRenamed("__id", idCol)
-    rebuildCleanText(docs, removals, n, textCol, idCol)
   }
 
   /** Distinct span-hash signatures of a corpus — the stored table
@@ -1514,19 +1396,6 @@ object TextOps {
     // every scale (the agg alternative measured no better)
     val windowParts =
       if (parts > 0) parts else fanoutParts(docs, textCol)
-    removeDupSpansAgainstWindow(docs, signatures, n, textCol, idCol,
-      windowParts)
-  }
-
-  /** The pre-r15 window formulation of [[removeDupSpansAgainst]] —
-    * small-volume plan and spec-pinned reference. */
-  private[graft] def removeDupSpansAgainstWindow(
-      docs: DataFrame,
-      signatures: DataFrame,
-      n: Int,
-      textCol: String,
-      idCol: String,
-      windowParts: Int): DataFrame = {
     val occ = docs.select(col(idCol).as("__id"),
         posexplode(graft.functions.TextKernels.spanHashesCol(
           normalize(col(textCol)), n)).as(Seq("__p", "__h")))
@@ -1554,48 +1423,6 @@ object TextOps {
         (col("__occ") > 1 &&
           !(col("__first")("__id") === col("__id") &&
             col("__first")("__p") === col("__p"))))
-      .groupBy(col("__id"))
-      .agg(collect_list(col("__p")).as("__starts"))
-      .withColumnRenamed("__id", idCol)
-    rebuildCleanText(docs, removals, n, textCol, idCol)
-  }
-
-  /** The at-scale formulation of [[removeDupSpansAgainst]] (r15) — same
-    * hash-aggregation election as [[removeDupSpansAgg]] (no corpus-global
-    * sort), with the corpus-signature membership attached by a second
-    * shuffled-hash join on the SAME hash partitioning: a batch occurrence
-    * is removed iff its window is corpus-known (wherever it occurs) or is
-    * a non-first duplicate within the batch — exactly the window plan's
-    * predicate (for a batch-unique hash the election join leaves a null
-    * first occurrence, matching `__occ > 1 = false`). */
-  private[graft] def removeDupSpansAgainstAgg(
-      docs: DataFrame,
-      signatures: DataFrame,
-      n: Int,
-      textCol: String,
-      idCol: String,
-      windowParts: Int): DataFrame = {
-    val occ = docs.select(col(idCol).as("__id"),
-        posexplode(graft.functions.TextKernels.spanHashesCol(
-          normalize(col(textCol)), n)).as(Seq("__p", "__h")))
-    val sized = occ.repartition(windowParts, col("__h"))
-    val dupFirst = sized.groupBy(col("__h"))
-      .agg(count(lit(1)).as("__occ"),
-        min(packedOcc(col("__id"), col("__p"))).as("__firstP"))
-      .filter(col("__occ") > 1)
-      .select(col("__h"), col("__firstP"))
-    // same dedup rationale as the window shape (appended signature
-    // snapshots accumulate duplicate hashes)
-    val sigs = signatures
-      .select(col("span_hash").as("__h"))
-      .dropDuplicates("__h")
-      .withColumn("__corpus", lit(true))
-    val removals = sized
-      .join(sigs.hint("shuffle_hash"), Seq("__h"), "left")
-      .join(dupFirst.hint("shuffle_hash"), Seq("__h"), "left")
-      .filter(coalesce(col("__corpus"), lit(false)) ||
-        (col("__firstP").isNotNull &&
-          packedOcc(col("__id"), col("__p")) =!= col("__firstP")))
       .groupBy(col("__id"))
       .agg(collect_list(col("__p")).as("__starts"))
       .withColumnRenamed("__id", idCol)

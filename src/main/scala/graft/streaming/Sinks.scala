@@ -32,7 +32,13 @@ object Sinks {
   /** Callback sink: the Spark analog of AddSink(fn). The `foreachBatch`
     * sink reports no output row count in its progress, so the rows handed
     * to `f` are counted here, on the stream thread, for
-    * [[StreamMetrics]]' `output_count`. */
+    * [[StreamMetrics]]' `output_count`.
+    *
+    * Delivery is AT-LEAST-ONCE: the batch id is not passed on or
+    * remembered, so a batch that Spark re-runs after a failure between
+    * this call and its commit-log entry reaches `f` a second time. A
+    * callback that needs exactly-once must make its effect idempotent
+    * (ROADMAP direction 4 tracks closing this). */
   def addSink(df: DataFrame)(f: Seq[Row] => Unit): DataStreamWriter[Row] =
     df.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
       val rows = batch.collect().toSeq

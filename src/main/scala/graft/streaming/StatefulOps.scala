@@ -133,6 +133,38 @@ object StatefulOps extends Serializable {
     }
   }
 
+  /** Schemas shared by the window-result operators ([[countingWindow]],
+    * [[sessionWindowAnalytics]], [[tumblingWindowAnalytics]]): the window
+    * result (keys + slot columns + `__wstart`/`__wend`), and the output,
+    * which appends one column per cross-window analytic call. The calls'
+    * aggregate arguments are already rewritten to slot idents, so a
+    * value-typed analytic takes its type from the window-result row. */
+  private def windowResultSchemas(
+      schema: StructType,
+      keyNames: List[String],
+      slots: List[(FuncCall, String)],
+      anCalls: List[(FuncCall, String)]): (StructType, StructType) = {
+    val resultSchema = StructType(
+      keyNames.map(k => schema(k)) ++
+        slots.map { case (fc, sn) => StructField(sn, aggType(fc, schema), nullable = true) } ++
+        List(StructField("__wstart", LongType), StructField("__wend", LongType)))
+    def anType(fc: FuncCall): DataType = fc.lname match {
+      case "had_changed" => BooleanType
+      case "acc_count" => LongType
+      case acc if acc.startsWith("acc_") => DoubleType
+      case n if graft.functions.FunctionMap.isCustomAnalytic(n) =>
+        graft.functions.FunctionMap.customAnalyticResultType(n).getOrElse(DoubleType)
+      case _ =>
+        fc.args.collectFirst {
+          case Ident(segs) if resultSchema.fieldNames.contains(segs.head.name) =>
+            resultSchema(segs.head.name).dataType
+        }.getOrElse(DoubleType)
+    }
+    val outSchema = StructType(resultSchema.fields ++
+      anCalls.map { case (fc, an) => StructField(an, anType(fc), nullable = true) })
+    (resultSchema, outSchema)
+  }
+
   private def aggValue(fc: FuncCall, rows: Seq[Map[String, Any]]): Any = {
     if (fc.lname == "count" && fc.args == List(Star)) rows.size.toLong
     else {
@@ -165,25 +197,8 @@ object StatefulOps extends Serializable {
 
     val schema = df.schema
     val names = schema.fieldNames
-    val resultFields =
-      keyNames.map(k => schema(k)) ++
-        slots.map { case (fc, sn) => StructField(sn, aggType(fc, schema), nullable = true) } ++
-        List(StructField("__wstart", LongType), StructField("__wend", LongType))
-    val resultSchema = StructType(resultFields)
-    def anType(fc: FuncCall): DataType = fc.lname match {
-      case "had_changed" => BooleanType
-      case "acc_count" => LongType
-      case acc if acc.startsWith("acc_") => DoubleType
-      case n if graft.functions.FunctionMap.isCustomAnalytic(n) =>
-        graft.functions.FunctionMap.customAnalyticResultType(n).getOrElse(DoubleType)
-      case _ =>
-        fc.args.collectFirst {
-          case Ident(segs) if resultSchema.fieldNames.contains(segs.head.name) =>
-            resultSchema(segs.head.name).dataType
-        }.getOrElse(DoubleType)
-    }
-    val outSchema = StructType(resultFields ++
-      anCalls.map { case (fc, an) => StructField(an, anType(fc), nullable = true) })
+    val (resultSchema, outSchema) =
+      windowResultSchemas(schema, keyNames, slots, anCalls)
 
     // analytics across successive windows share per-key state (reference:
     // stream/stream.go:574-615); counting windows fire in event order per
@@ -640,25 +655,8 @@ object StatefulOps extends Serializable {
 
     val schema = df.schema
     val names = schema.fieldNames
-    val resultFields =
-      keyNames.map(k => schema(k)) ++
-        slots.map { case (fc, sn) => StructField(sn, aggType(fc, schema), nullable = true) } ++
-        List(StructField("__wstart", LongType), StructField("__wend", LongType))
-    val resultSchema = StructType(resultFields)
-    def anType(fc: FuncCall): DataType = fc.lname match {
-      case "had_changed" => BooleanType
-      case "acc_count" => LongType
-      case acc if acc.startsWith("acc_") => DoubleType
-      case n if graft.functions.FunctionMap.isCustomAnalytic(n) =>
-        graft.functions.FunctionMap.customAnalyticResultType(n).getOrElse(DoubleType)
-      case _ =>
-        fc.args.collectFirst {
-          case Ident(segs) if resultSchema.fieldNames.contains(segs.head.name) =>
-            resultSchema(segs.head.name).dataType
-        }.getOrElse(DoubleType)
-    }
-    val outSchema = StructType(resultFields ++
-      anCalls.map { case (fc, an) => StructField(an, anType(fc), nullable = true) })
+    val (resultSchema, outSchema) =
+      windowResultSchemas(schema, keyNames, slots, anCalls)
 
     val customReg = customSnapshot()
     def process(stIn: Option[SessState], incoming: Vector[Map[String, Any]],
@@ -814,26 +812,8 @@ object StatefulOps extends Serializable {
     val schema = df.schema
     val names = schema.fieldNames
 
-    val resultFields: List[StructField] =
-      keyNames.map(k => schema(k)) ++
-        slots.map { case (fc, sn) => StructField(sn, aggType(fc, schema), nullable = true) } ++
-        List(StructField("__wstart", LongType), StructField("__wend", LongType))
-    val resultSchema = StructType(resultFields)
-
-    def anType(fc: FuncCall): DataType = fc.lname match {
-      case "had_changed" => BooleanType
-      case "acc_count" => LongType
-      case acc if acc.startsWith("acc_") => DoubleType
-      case n if graft.functions.FunctionMap.isCustomAnalytic(n) =>
-        graft.functions.FunctionMap.customAnalyticResultType(n).getOrElse(DoubleType)
-      case _ =>
-        fc.args.collectFirst {
-          case Ident(segs) if resultSchema.fieldNames.contains(segs.head.name) =>
-            resultSchema(segs.head.name).dataType
-        }.getOrElse(DoubleType)
-    }
-    val outSchema = StructType(resultFields ++
-      anCalls.map { case (fc, n) => StructField(n, anType(fc), nullable = true) })
+    val (resultSchema, outSchema) =
+      windowResultSchemas(schema, keyNames, slots, anCalls)
 
     val customReg = customSnapshot()
     def process(stIn: Option[TwState], incoming: Vector[Map[String, Any]],

@@ -1772,6 +1772,16 @@ class OperatorsSpec extends AnyFunSuite {
     val r2 = TextOps.removeDupSpansAgainst(batch, dupSigs, n = 4).collect()
       .map(x => x.getLong(0) -> ((x.getString(1), x.getLong(3)))).toMap
     assert(r2 == r, s"duplicate signatures changed results: $r2 vs $r")
+    // batch-internal election orders by (id, pos), negative ids first;
+    // empty and null text pass through, counted as in removeDupSpans
+    val edge = TextOps.removeDupSpansAgainst(Seq(
+      (1L, "xx yy zz ww"),
+      (-6L, "pre xx yy zz ww"),
+      (3L, ""),
+      (8L, null.asInstanceOf[String])).toDF("doc_id", "text"), sigs, n = 4)
+      .collect().map(x => x.getLong(0) -> x.toSeq.tail).toMap
+    assert(edge == Map(1L -> Seq("", 4L, 4L), -6L -> Seq("pre xx yy zz ww", 5L, 0L),
+      3L -> Seq("", 1L, 0L), 8L -> Seq("", null, null)), edge)
   }
 
   test("langSegments: char-weighted primary language, mixed-doc detection") {
@@ -1998,53 +2008,16 @@ class OperatorsSpec extends AnyFunSuite {
       Seq((1L, "one two"), (2L, "one two")).toDF("doc_id", "text"), n = 50)
       .collect().map(x => (x.getLong(1), x.getLong(2), x.getDouble(3)))
     assert(s.forall(_ == (1L, 1L, 1.0)))
-  }
-
-  test("dup-span agg shapes reproduce the window shapes bit-for-bit") {
-    // the r15 at-scale hash-aggregation shapes (no corpus-global sort)
-    // must equal the window formulations on every edge: shared spans,
-    // full copies, WITHIN-doc repeated windows (first-occurrence election
-    // by position), short docs, empty and null text, negative ids
-    val d = Seq(
-      (5L, "aa bb cc dd unique1 unique2 unique3"),
-      (2L, "other0 aa bb cc dd other1 other2"),
-      (9L, "aa bb cc dd unique1 unique2 unique3"),
-      (4L, "zz yy xx ww vv uu tt"),
-      (1L, "rep rep rep rep rep rep rep rep rep"),
-      (7L, "one two"),
+    // empty and null text have no windows, so no row; a negative id
+    // shares windows like any other
+    val e = TextOps.dupSpans(Seq(
+      (1L, "aa bb cc dd"),
+      (-6L, "pre aa bb cc dd"),
       (3L, ""),
-      (-6L, "aa bb cc dd other1 other2 other3"),
-      (8L, null.asInstanceOf[String])).toDF("doc_id", "text")
-    for (n <- Seq(2, 4)) {
-      val dw = TextOps.dupSpansWindow(d, n, "text", "doc_id", 64)
-        .orderBy("doc_id").collect().toSeq
-      val da = TextOps.dupSpansAgg(d, n, "text", "doc_id", 64)
-        .orderBy("doc_id").collect().toSeq
-      assert(da == dw, s"dupSpans agg != window at n=$n")
-      val rw = TextOps.removeDupSpansWindow(d, n, "text", "doc_id", 64)
-        .orderBy("doc_id").collect().toSeq
-      val ra = TextOps.removeDupSpansAgg(d, n, "text", "doc_id", 64)
-        .orderBy("doc_id").collect().toSeq
-      assert(ra == rw, s"removeDupSpans agg != window at n=$n")
-    }
-    // incremental twin: corpus owns doc 5's windows; batch-internal dups
-    // still elect by (id, pos)
-    val sigs = TextOps.spanSignatures(d.filter(col("doc_id") === 5L), n = 4)
-    val iw = TextOps.removeDupSpansAgainstWindow(d, sigs, 4, "text", "doc_id", 64)
-      .orderBy("doc_id").collect().toSeq
-    val ia = TextOps.removeDupSpansAgainstAgg(d, sigs, 4, "text", "doc_id", 64)
-      .orderBy("doc_id").collect().toSeq
-    assert(ia == iw, "removeDupSpansAgainst agg != window")
-    // the sf fixture corpus through the PUBLIC dispatch (small volume →
-    // window) vs the forced agg shape — real text, real hashes
-    val fw = TextOps.dupSpans(docs, n = 8).orderBy("doc_id").collect().toSeq
-    val fa = TextOps.dupSpansAgg(docs, 8, "text", "doc_id", 64)
-      .orderBy("doc_id").collect().toSeq
-    assert(fa == fw, "dupSpans agg != window on sf0.001 documents")
-    val gw = TextOps.removeDupSpans(docs, n = 8).orderBy("doc_id").collect().toSeq
-    val ga = TextOps.removeDupSpansAgg(docs, 8, "text", "doc_id", 64)
-      .orderBy("doc_id").collect().toSeq
-    assert(ga == gw, "removeDupSpans agg != window on sf0.001 documents")
+      (8L, null.asInstanceOf[String])).toDF("doc_id", "text"), n = 4)
+      .collect().map(x => x.getLong(0) -> ((x.getLong(1), x.getLong(2), x.getDouble(3))))
+      .toMap
+    assert(e == Map(1L -> ((1L, 1L, 1.0)), -6L -> ((2L, 1L, 0.5))), e)
   }
 
   test("hybridTopK fuses lexical and semantic ranks with RRF") {
@@ -2140,6 +2113,18 @@ class OperatorsSpec extends AnyFunSuite {
       Seq((1L, "one two"), (2L, "one two")).toDF("doc_id", "text"), n = 50)
       .collect().map(_.getString(1))
     assert(short.forall(_ == "one two"))
+    // the election orders by (id, pos): negative id -6 holds the shared
+    // window at position 1 and still beats doc 1's position 0; empty and
+    // null text have no windows and pass through (word counts follow
+    // split: '' is one empty word, null text counts null)
+    val edge = TextOps.removeDupSpans(Seq(
+      (1L, "aa bb cc dd"),
+      (-6L, "pre aa bb cc dd"),
+      (3L, ""),
+      (8L, null.asInstanceOf[String])).toDF("doc_id", "text"), n = 4)
+      .collect().map(x => x.getLong(0) -> x.toSeq.tail).toMap
+    assert(edge == Map(1L -> Seq("", 4L, 4L), -6L -> Seq("pre aa bb cc dd", 5L, 0L),
+      3L -> Seq("", 1L, 0L), 8L -> Seq("", null, null)), edge)
   }
 
   test("bm25 ranks term-bearing docs and respects topK") {
