@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, Literal, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, Literal, UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.GraftColumnBridge
@@ -312,8 +312,15 @@ object TextKernels {
   def spanHashes(norm: UTF8String, n: Int): ArrayData = {
     val bytes = norm.getBytes
     val starts = wordStarts(bytes)
+    if (starts.size() < n) return new GenericArrayData(Array.emptyLongArray)
+    new GenericArrayData(windowHashes(bytes, starts, n))
+  }
+
+  /** The hash of every n-word window, in document order (needs at least
+    * n words). */
+  private def windowHashes(bytes: Array[Byte],
+      starts: java.util.ArrayList[Integer], n: Int): Array[Long] = {
     val words = starts.size()
-    if (words < n) return new GenericArrayData(Array.emptyLongArray)
     val out = new Array[Long](words - n + 1)
     var w = 0
     while (w + n <= words) {
@@ -322,7 +329,7 @@ object TextKernels {
       out(w) = sliceHash(bytes, from, until)
       w += 1
     }
-    new GenericArrayData(out)
+    out
   }
 
   // ------------------------------------------------- span-removal rebuild
@@ -458,27 +465,91 @@ object TextKernels {
 
   // ------------------------------------------------------------- minhash
 
-  /** MinHash band buckets in one pass: per shingle ONE xxhash64 of the
-    * bytes, then k cheap hashLong mixes; per band the row-minima fold into
-    * a 64-bit bucket key. Output: array(bands) of bucket hashes — feed to
-    * posexplode for the (band, bucket) LSH join. */
-  def minhashBucketsCol(shingles: Column, bands: Int, rows: Int): Column =
+  /** The one shingle representation of the MinHash family: the word
+    * n-grams of [[shingles]] (same edges — whole text, `""` included,
+    * when shorter than n words), each reduced to ONE xxhash64 (seed 42,
+    * Spark's `xxhash64` of the gram string) computed directly over the
+    * normalized string's byte slice, returned sorted and distinct. Band
+    * buckets and signatures read it ([[minhashBuckets]],
+    * [[minhashSignature]]), and the exact Jaccard of two documents is a
+    * linear merge of two of these arrays ([[sortedJaccard]]) — 8 bytes
+    * per shingle through the verify joins instead of a UTF8String, and
+    * no interpreted `array_intersect`/`array_union`. */
+  def shingleHashesCol(normText: Column, n: Int): Column =
+    GraftColumnBridge.column(
+      StaticInvoke(
+        TextKernels.getClass, ArrayType(LongType, containsNull = false),
+        "shingleHashes",
+        Seq(GraftColumnBridge.expression(normText), Literal(n)),
+        Seq(StringType, IntegerType),
+        returnNullable = false))
+
+  def shingleHashes(norm: UTF8String, n: Int): ArrayData = {
+    val bytes = norm.getBytes
+    val starts = wordStarts(bytes)
+    if (starts.size() < n)
+      return UnsafeArrayData.fromPrimitiveArray(Array(sliceHash(bytes, 0, bytes.length)))
+    val hs = windowHashes(bytes, starts, n)
+    java.util.Arrays.sort(hs)
+    var m = 1
+    var i = 1
+    while (i < hs.length) {
+      if (hs(i) != hs(m - 1)) { hs(m) = hs(i); m += 1 }
+      i += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(
+      if (m == hs.length) hs else java.util.Arrays.copyOf(hs, m))
+  }
+
+  /** Exact Jaccard |a ∩ b| / |a ∪ b| of two sorted, distinct hash arrays
+    * ([[shingleHashesCol]]) by one merge count — unrounded; the Dedup
+    * operators round it to 6 digits. */
+  def sortedJaccardCol(a: Column, b: Column): Column =
+    GraftColumnBridge.column(
+      StaticInvoke(
+        TextKernels.getClass, DoubleType, "sortedJaccard",
+        Seq(GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)),
+        Seq(ArrayType(LongType), ArrayType(LongType)),
+        returnNullable = false))
+
+  def sortedJaccard(a: ArrayData, b: ArrayData): Double = {
+    val na = a.numElements()
+    val nb = b.numElements()
+    var i = 0
+    var j = 0
+    var both = 0
+    while (i < na && j < nb) {
+      val x = a.getLong(i)
+      val y = b.getLong(j)
+      if (x == y) { both += 1; i += 1; j += 1 }
+      else if (x < y) i += 1
+      else j += 1
+    }
+    both.toDouble / (na + nb - both)
+  }
+
+  /** MinHash band buckets in one pass over a [[shingleHashesCol]] array:
+    * k cheap hashLong mixes per shingle hash; per band the row-minima fold
+    * into a 64-bit bucket key. Output: array(bands) of bucket hashes —
+    * feed to posexplode for the (band, bucket) LSH join. */
+  def minhashBucketsCol(shingleHashes: Column, bands: Int, rows: Int): Column =
     GraftColumnBridge.column(
       StaticInvoke(
         TextKernels.getClass, ArrayType(LongType, containsNull = false),
         "minhashBuckets",
-        Seq(GraftColumnBridge.expression(shingles), Literal(bands), Literal(rows)),
-        Seq(ArrayType(StringType), IntegerType, IntegerType),
+        Seq(GraftColumnBridge.expression(shingleHashes), Literal(bands), Literal(rows)),
+        Seq(ArrayType(LongType), IntegerType, IntegerType),
         returnNullable = false))
 
-  /** Raw k-position MinHash signature (storable; see [[minhashSignature]]). */
-  def minhashSignatureCol(shingles: Column, k: Int): Column =
+  /** Raw k-position MinHash signature of a [[shingleHashesCol]] array
+    * (storable; see [[minhashSignature]]). */
+  def minhashSignatureCol(shingleHashes: Column, k: Int): Column =
     GraftColumnBridge.column(
       StaticInvoke(
         TextKernels.getClass, ArrayType(LongType, containsNull = false),
         "minhashSignature",
-        Seq(GraftColumnBridge.expression(shingles), Literal(k)),
-        Seq(ArrayType(StringType), IntegerType),
+        Seq(GraftColumnBridge.expression(shingleHashes), Literal(k)),
+        Seq(ArrayType(LongType), IntegerType),
         returnNullable = false))
 
   /** Band buckets from a stored signature (see [[sigBuckets]]). */
@@ -613,8 +684,8 @@ object TextKernels {
     InternalRow(bytes.length, out)
   }
 
-  def minhashBuckets(shingles: ArrayData, bands: Int, rows: Int): ArrayData = {
-    val buckets = foldBands(signatureMins(shingles, bands * rows), bands, rows)
+  def minhashBuckets(shingleHashes: ArrayData, bands: Int, rows: Int): ArrayData = {
+    val buckets = foldBands(signatureMins(shingleHashes, bands * rows), bands, rows)
     new GenericArrayData(buckets)
   }
 
@@ -623,8 +694,8 @@ object TextKernels {
     * split derive from it via [[sigBuckets]] without re-reading text, and
     * the matching-position fraction of two signatures is the standard
     * unbiased Jaccard estimator. */
-  def minhashSignature(shingles: ArrayData, k: Int): ArrayData =
-    new GenericArrayData(signatureMins(shingles, k))
+  def minhashSignature(shingleHashes: ArrayData, k: Int): ArrayData =
+    new GenericArrayData(signatureMins(shingleHashes, k))
 
   /** Band-bucket keys from a stored signature — bit-identical to
     * [[minhashBuckets]] computed from text (the differential property the
@@ -637,14 +708,13 @@ object TextKernels {
     new GenericArrayData(foldBands(mins, bands, rows))
   }
 
-  private def signatureMins(shingles: ArrayData, k: Int): Array[Long] = {
+  private def signatureMins(shingleHashes: ArrayData, k: Int): Array[Long] = {
     val mins = new Array[Long](k)
     java.util.Arrays.fill(mins, Long.MaxValue)
-    val n = shingles.numElements()
+    val n = shingleHashes.numElements()
     var i = 0
     while (i < n) {
-      val s = shingles.getUTF8String(i)
-      val base = XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, 42L)
+      val base = shingleHashes.getLong(i)
       var p = 0
       while (p < k) {
         val v = XXH64.hashLong(base, p)

@@ -44,18 +44,19 @@ object Curation {
       if (lineMaxDf <= 0) docs
       else docs.drop(textCol) // inner join drops all-boilerplate docs
         .join(Dedup.dropCommonLines(docs, textCol, idCol, lineMaxDf), Seq(idCol))
+    // not persisted: pair generation reads the filter once (into its own
+    // persisted shingle-hash set), and the returned plan re-derives the
+    // one-scan filter for the anti-join when the caller consumes it
     val filtered = TextOps.analyze(pre, textCol)
       .filter(col("lang_pred").isin(langs: _*) &&
         col("quality") >= minQuality &&
         col("token_count").between(minTokens, maxTokens))
-      .persist() // pair generation + anti-join both read it
 
     val pairs = Dedup.minHashPairs(filtered, textCol, idCol,
       threshold = jaccardThreshold)
     val kept = Dedup.keepCanonical(filtered, pairs, idCol,
       maxIter = ccMaxIter, localThreshold = ccLocalThreshold)
     pairs.unpersist(false)
-    filtered.unpersist(false) // final plan re-derives the (one-scan) filter
     kept
   }
 

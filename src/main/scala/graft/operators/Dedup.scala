@@ -10,6 +10,15 @@ import org.apache.spark.sql.functions._
   * plan scales out with executors; verification only touches candidate
   * pairs (LSH guarantees the candidate set is ~linear for bounded
   * similarity thresholds).
+  *
+  * The MinHash family ([[minHashPairs]], [[minHashPairsAgainst]],
+  * [[nearDupStream]], [[ngramJaccardPairs]], the signature operators)
+  * represents a document's shingles as ONE sorted, distinct array of
+  * 64-bit xxhash64 values ([[TextOps.shingleHashes]]). Band buckets and
+  * signatures fold from it, and verification is the exact Jaccard of two
+  * such arrays (one merge count): it equals the Jaccard of the shingle
+  * strings unless two distinct shingles of the pair share an xxhash64
+  * value (a 64-bit collision).
   */
 object Dedup {
 
@@ -92,7 +101,7 @@ object Dedup {
       threshold: Double = 0.7,
       maxBucket: Int = 100000): DataFrame = {
     val shC = corpus.select(
-      col(idCol).as("__cid"), TextOps.shingles(col(textCol), shingleN).as("__csh"))
+      col(idCol).as("__cid"), TextOps.shingleHashes(col(textCol), shingleN).as("__csh"))
     val grouped0 = shC.select(col("__cid"),
         posexplode(graft.functions.TextKernels.minhashBucketsCol(col("__csh"), bands, rows)))
       .withColumnRenamed("pos", "band")
@@ -103,7 +112,7 @@ object Dedup {
       else grouped0.filter(size(col("__ids")) <= maxBucket)
     val banded = stream
       .select(col(idCol).as("doc_new"), col(tsCol).as("__ts"),
-        TextOps.shingles(col(textCol), shingleN).as("__nsh"))
+        TextOps.shingleHashes(col(textCol), shingleN).as("__nsh"))
       .select(col("doc_new"), col("__ts"), col("__nsh"),
         posexplode(graft.functions.TextKernels.minhashBucketsCol(col("__nsh"), bands, rows)))
       .withColumnRenamed("pos", "band")
@@ -113,9 +122,7 @@ object Dedup {
         explode(col("__ids")).as("doc_corpus"))
       .filter(col("doc_new") =!= col("doc_corpus"))
       .join(shC, col("doc_corpus") === col("__cid"))
-      .withColumn("jaccard",
-        round(size(array_intersect(col("__nsh"), col("__csh"))).cast("double") /
-          size(array_union(col("__nsh"), col("__csh"))), 6))
+      .withColumn("jaccard", shingleJaccard(col("__nsh"), col("__csh")))
       .filter(col("jaccard") >= threshold)
       .select(col("doc_new"), col("doc_corpus"), col("jaccard"), col("__ts").as(tsCol))
       .withWatermark(tsCol, delay)
@@ -151,7 +158,7 @@ object Dedup {
   }
 
   /** MinHash + LSH near-dup pairs: signature → b bands of r rows →
-    * band-bucket join → exact Jaccard verify on shingle sets.
+    * band-bucket join → exact Jaccard verify on the shingle-hash sets.
     *
     * @param maxBucket hot-bucket cap: a (band, bucket) shared by more than
     *   this many docs is dropped ENTIRELY from candidate generation (all
@@ -170,14 +177,14 @@ object Dedup {
       rows: Int = 4,
       threshold: Double = 0.7,
       maxBucket: Int = 100000): DataFrame = {
-    // shingle + hash once; shingles persisted — the verification joins
-    // must not recompute them, and the banded join must stay SLIM (ids
-    // only): shipping shingle arrays through a 16× band explosion is the
-    // difference between seconds and minutes at scale. Band buckets come
-    // from the single-pass kernel (one xxhash64 per shingle + cheap long
-    // mixes) instead of interpreted HOF lambdas.
+    // shingle + hash once; the sorted shingle-hash arrays are persisted —
+    // the verification joins must not recompute them, and the banded join
+    // must stay SLIM (ids only): shipping shingle arrays through a 16×
+    // band explosion is the difference between seconds and minutes at
+    // scale. Band buckets fold from the hashes (cheap long mixes) in one
+    // kernel pass instead of interpreted HOF lambdas.
     val withSh = docs
-      .select(col(idCol).as("id"), TextOps.shingles(col(textCol), shingleN).as("sh"))
+      .select(col(idCol).as("id"), TextOps.shingleHashes(col(textCol), shingleN).as("sh"))
       .persist()
 
     val banded = withSh.select(
@@ -210,9 +217,7 @@ object Dedup {
       .join(withSh.select(col("id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
       .hint("shuffle_hash")
       .join(withSh.select(col("id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
-      .withColumn("jaccard",
-        round(size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))), 6))
+      .withColumn("jaccard", shingleJaccard(col("sh_a"), col("sh_b")))
       .filter(col("jaccard") >= threshold)
       .select("doc_a", "doc_b", "jaccard")
     materializeAndRelease(out, withSh)
@@ -243,7 +248,7 @@ object Dedup {
       threshold: Double = 0.7,
       maxBucket: Int = 100000): DataFrame = {
     def shingled(df: DataFrame) = df
-      .select(col(idCol).as("id"), TextOps.shingles(col(textCol), shingleN).as("sh"))
+      .select(col(idCol).as("id"), TextOps.shingleHashes(col(textCol), shingleN).as("sh"))
       .persist()
     def banded(sh: DataFrame) = sh.select(
         col("id"),
@@ -268,9 +273,7 @@ object Dedup {
       .join(shN.select(col("id").as("doc_new"), col("sh").as("sh_a")), "doc_new")
       .hint("shuffle_hash")
       .join(shC.select(col("id").as("doc_corpus"), col("sh").as("sh_b")), "doc_corpus")
-      .withColumn("jaccard",
-        round(size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))), 6))
+      .withColumn("jaccard", shingleJaccard(col("sh_a"), col("sh_b")))
       .filter(col("jaccard") >= threshold)
       .select("doc_new", "doc_corpus", "jaccard")
     materializeAndRelease(out, shN, shC)
@@ -294,7 +297,12 @@ object Dedup {
       rows: Int = 4): DataFrame =
     docs.select(col(idCol).as("doc_id"),
       graft.functions.TextKernels.minhashSignatureCol(
-        TextOps.shingles(col(textCol), shingleN), bands * rows).as("sig"))
+        TextOps.shingleHashes(col(textCol), shingleN), bands * rows).as("sig"))
+
+  /** Exact shingle Jaccard of two [[TextOps.shingleHashes]] arrays, rounded
+    * to 6 digits: one merge count over the sorted hashes. */
+  private[operators] def shingleJaccard(a: Column, b: Column): Column =
+    round(graft.functions.TextKernels.sortedJaccardCol(a, b), 6)
 
   /** Signature-only matching-position Jaccard estimate (unbiased; std err
     * ~ sqrt(J(1-J)/k)). */
@@ -593,8 +601,12 @@ object Dedup {
     // near-dup pair graphs are usually tiny relative to the corpus (only
     // dup docs appear); below the threshold a driver union-find costs one
     // collect instead of one Spark round per cluster diameter. Above it,
-    // the distributed propagation takes over — same min-id labels.
-    val nEdges = e0.count()
+    // the distributed propagation takes over — same min-id labels. The
+    // null-endpoint census for the loop choice below rides in the same
+    // job as the edge count.
+    val census = e0.agg(count(lit(1)),
+      count_if(col("src").isNull || col("dst").isNull)).head()
+    val nEdges = census.getLong(0)
     if (nEdges <= localThreshold) {
       val spark = pairs.sparkSession
       val dt = pairs.schema(aCol).dataType
@@ -635,7 +647,7 @@ object Dedup {
           org.apache.spark.sql.types.LongType &&
         pairs.schema(bCol).dataType ==
           org.apache.spark.sql.types.LongType &&
-        e0.filter(col("src").isNull || col("dst").isNull).isEmpty) {
+        census.getLong(1) == 0L) {
       val (out, labels) = connectedComponentsRddLong(e0, maxIter, nEdges)
       e0.unpersist(false)
       return (out, () => labels.unpersist(false))
@@ -1022,7 +1034,7 @@ object Dedup {
     val banded = stream
       .select(col(idCol).as("doc_new"), col(tsCol).as("__ts"),
         graft.functions.TextKernels.minhashSignatureCol(
-          TextOps.shingles(col(textCol), shingleN), bands * rows).as("__nsig"))
+          TextOps.shingleHashes(col(textCol), shingleN), bands * rows).as("__nsig"))
       .select(col("doc_new"), col("__ts"), col("__nsig"),
         posexplode(graft.functions.TextKernels.sigBucketsCol(col("__nsig"), bands, rows)))
       .withColumnRenamed("pos", "band")
@@ -1080,12 +1092,10 @@ object Dedup {
       n: Int = 3,
       threshold: Double = 0.5): DataFrame = {
     val d = docs.select(col(idCol).as("id"),
-      TextOps.shingles(col(textCol), n).as("sh"), blockCol.as("blk"))
+      TextOps.shingleHashes(col(textCol), n).as("sh"), blockCol.as("blk"))
     val a = d.alias("a"); val b = d.alias("b")
     a.join(b, col("a.blk") === col("b.blk") && col("a.id") < col("b.id"))
-      .withColumn("jaccard",
-        round(size(array_intersect(col("a.sh"), col("b.sh"))).cast("double") /
-          size(array_union(col("a.sh"), col("b.sh"))), 6))
+      .withColumn("jaccard", shingleJaccard(col("a.sh"), col("b.sh")))
       .filter(col("jaccard") >= threshold)
       .select(col("a.id").as("doc_a"), col("b.id").as("doc_b"), col("jaccard"))
   }

@@ -350,6 +350,12 @@ object TextOps {
   def shingles(text: Column, n: Int): Column =
     graft.functions.TextKernels.shinglesCol(normalize(text), n)
 
+  /** [[shingles]] as sorted, distinct 64-bit xxhash64 values — the
+    * MinHash family's shingle representation
+    * ([[graft.functions.TextKernels.shingleHashesCol]]). */
+  def shingleHashes(text: Column, n: Int): Column =
+    graft.functions.TextKernels.shingleHashesCol(normalize(text), n)
+
   /** md5-derived 60-bit token hash — reproducible in any ANSI engine that
     * has md5 + hex parsing (the DuckDB oracle uses
     * `('0x' || substr(md5(t),1,15))::BIGINT`). 15 hex chars = 60 bits,
@@ -1257,8 +1263,13 @@ object TextOps {
     * re-join with single spaces. Deterministic: which copy survives depends
     * only on ids/positions, never on partitioning. Documents shorter than
     * `n` words have no windows and pass through untouched; a document can
-    * empty out entirely (boilerplate mirrors) — `n_removed = n_words` finds
-    * those for dropping.
+    * empty out entirely (boilerplate mirrors).
+    *
+    * Edge semantics: words are counted as `split(text, ' ')` counts them,
+    * so an empty text comes back as `clean_text` '' with `n_words` 1 and
+    * `n_removed` 0, and a null text as `clean_text` '' (not null) with
+    * null counts. `n_removed = n_words` alone therefore misses both; the
+    * test for "nothing left" is `clean_text = '' OR n_removed = n_words`.
     *
     * Plan at scale: positional windows leave the scan as (id, pos, 64-bit
     * xxhash64) rows — one fused kernel, no per-gram strings, and the
@@ -1382,6 +1393,11 @@ object TextOps {
     * partitioning, no second exchange); removal positions roll up per
     * doc and one id-keyed join rebuilds the text, exactly the
     * [[removeDupSpans]] tail.
+    *
+    * Edge semantics are [[removeDupSpans]]'s: empty text gives
+    * `clean_text` '' with `n_words` 1 and `n_removed` 0, null text gives
+    * `clean_text` '' with null counts; test emptied documents with
+    * `clean_text = '' OR n_removed = n_words`.
     *
     * @return (idCol, clean_text, n_words, n_removed) */
   def removeDupSpansAgainst(

@@ -189,6 +189,26 @@ class TextKernelsSpec extends AnyFunSuite {
     }
   }
 
+  test("shingleHashes is the sorted distinct xxhash64 of the string shingles") {
+    // every MinHash operator reads this array, so it must equal hashing
+    // the materialized shingle strings with Spark's own xxhash64 (seed 42
+    // over the UTF-8 bytes) — empty and short texts keep their single
+    // whole-text element, null stays null
+    val norm = graft.operators.TextOps.normalize(col("text"))
+    val df = (edgeCases :+ null).toDF("text")
+    for (n <- Seq(1, 2, 3, 50)) {
+      val rows = df.select(
+        TextKernels.shingleHashesCol(norm, n).as("k"),
+        array_sort(array_distinct(transform(TextKernels.shinglesCol(norm, n),
+          g => xxhash64(g)))).as("r")).collect()
+      rows.foreach { r =>
+        assert(r.isNullAt(0) == r.isNullAt(1), s"null mismatch at n=$n")
+        if (!r.isNullAt(0)) assert(r.getSeq[Long](0) == r.getSeq[Long](1),
+          s"shingle hashes diverge at n=$n")
+      }
+    }
+  }
+
   test("removeSpans kernel matches the filter×exists Column formulation") {
     // overlapping, unsorted, duplicate, out-of-range and empty removal
     // sets; null and empty text

@@ -123,6 +123,22 @@ class OperatorsSpec extends AnyFunSuite {
     assert(kept.toSeq == Seq(1L, 10L, 20L, 99L))
   }
 
+  test("distributed components on pairs with a null endpoint take the DataFrame loop") {
+    // the long-id RDD loop cannot carry a null id, so a null endpoint must
+    // route the call to the generic loop (decided by the same job that
+    // counts the edges). There the null node sends nothing (a null key
+    // joins no label), so 2's and 3's clusters stay apart, while both
+    // neighbours' labels reach it and it takes their min
+    val pairs = Seq[(java.lang.Long, java.lang.Long)]((1L, 2L), (2L, null),
+      (null, 3L), (3L, 4L), (5L, 6L)).toDF("doc_a", "doc_b")
+    val cc = Dedup.connectedComponents(pairs, localThreshold = 0L).collect()
+      .map(r => Option(r.get(0)) -> Option(r.get(1))).toMap
+    val expect = Map[Long, Long](1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 3L,
+      5L -> 5L, 6L -> 5L).map { case (k, v) => Option(k: Any) -> Option(v: Any) } +
+      (None -> Some(1L))
+    assert(cc == expect)
+  }
+
   test("keepBest keeps the highest-score member per cluster, ties to lowest id") {
     // cluster {1,2,3}: 2 has top score; cluster {10,11}: tie -> keep 10;
     // 99 untouched

@@ -74,10 +74,11 @@ class SketchesSpec extends AnyFunSuite {
 
   test("signature band buckets are bit-identical to text-side banding") {
     // the property that makes stored sketches trustworthy: candidates from
-    // a (doc_id, sig) table EQUAL candidates from re-shingled text
+    // a (doc_id, sig) table EQUAL candidates from re-shingled text (the
+    // shingle-hash banding minHashPairs runs)
     val fromText = docs.select(col("doc_id"),
         graft.functions.TextKernels.minhashBucketsCol(
-          TextOps.shingles(col("text"), 3), 16, 4).as("b"))
+          TextOps.shingleHashes(col("text"), 3), 16, 4).as("b"))
     val fromSig = Dedup.minHashSignatures(docs)
       .select(col("doc_id"),
         graft.functions.TextKernels.sigBucketsCol(col("sig"), 16, 4).as("b"))
