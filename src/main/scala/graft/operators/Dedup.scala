@@ -571,15 +571,24 @@ object Dedup {
     * near-dup is transitive in intent (A≈B≈C is one cluster even when A,C
     * were never a candidate pair).
     *
-    * Min-label propagation: each round joins the undirected edge set with
-    * the current labels and folds `min` per node — one shuffle per round,
-    * map-side partial min, no driver-side graph. Rounds needed = cluster
-    * diameter; dup clusters are shallow (near-clique), so convergence in
-    * 2-4 rounds is typical. `maxIter` bounds adversarial chain graphs
-    * (large-star/small-star halves diameters if that ever matters; not
-    * worth the complexity for dup clusters). Convergence is detected by
-    * counting changed labels — one extra job per round on the (small)
-    * label set, not on the corpus. */
+    * The input is encoded once, before the execution path is chosen, so
+    * both paths label the same graph the same way:
+    *  - a pair with a null endpoint is dropped. A null id names no
+    *    document ([[keepCanonical]]'s anti-join never drops a null-id row)
+    *    and links nothing, as a recursive SQL join never propagates
+    *    through a null key; so no null row comes out.
+    *  - ids are labelled as longs. Long ids are used as they are; Int,
+    *    Short and Byte ids are widened; any other orderable type (String,
+    *    Double, Date, ...) is mapped to a dense code that preserves
+    *    Spark's ordering of the type (its distinct ids sorted and numbered
+    *    by `zipWithIndex`) and mapped back after labelling. The output
+    *    columns have the type of the input ids, and "smallest" is Spark's
+    *    ordering on every path: strings compare by UTF-8 bytes, as `min`
+    *    and ORDER BY do.
+    *
+    * Up to `localThreshold` pairs a driver union-find labels them in one
+    * collect; above it [[propagateLabels]] does, in at most `maxIter`
+    * rounds (one WARN when it stops with labels still changing). */
   def connectedComponents(
       pairs: DataFrame,
       aCol: String = "doc_a",
@@ -589,129 +598,105 @@ object Dedup {
     components(pairs, aCol, bCol, maxIter, localThreshold)._1
 
   /** [[connectedComponents]] plus a release of what its result still
-    * holds cached (the long-id loop's final label blocks) — to be called
-    * once the labels have been read. */
+    * holds cached (the distributed loop's final labels, the id code of
+    * non-integral ids), to be called once the labels have been read. */
   private def components(
       pairs: DataFrame,
       aCol: String,
       bCol: String,
       maxIter: Int,
       localThreshold: Long): (DataFrame, () => Unit) = {
-    val e0 = pairs.select(col(aCol).as("src"), col(bCol).as("dst")).persist()
+    import org.apache.spark.sql.types._
+    val spark = pairs.sparkSession
+    import spark.implicits._
+    val raw = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
+      .filter(col("src").isNotNull && col("dst").isNotNull)
+    // the type both id columns widen to in a union: the output type
+    val dt = raw.select(col("src")).union(raw.select(col("dst"))).schema.head.dataType
+    val ids = raw.select(col("src").cast(dt).as("src"), col("dst").cast(dt).as("dst"))
+    val code = dt match {
+      case LongType | IntegerType | ShortType | ByteType => None
+      case _ =>
+        val sorted = ids.select(col("src").as("id"))
+          .union(ids.select(col("dst").as("id"))).distinct().orderBy("id")
+        val coded = sorted.rdd.zipWithIndex()
+          .map { case (r, i) => org.apache.spark.sql.Row(r.get(0), i) }
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        Some((spark.createDataFrame(coded, StructType(Seq(
+          StructField("id", dt), StructField("code", LongType)))), coded))
+    }
+    val e0 = (code match {
+      case None => ids.select(col("src").cast(LongType).as("src"),
+        col("dst").cast(LongType).as("dst"))
+      case Some((c, _)) => ids
+        .join(c.select(col("id").as("src"), col("code").as("s")), "src")
+        .join(c.select(col("id").as("dst"), col("code").as("d")), "dst")
+        .select(col("s").as("src"), col("d").as("dst"))
+    }).persist()
     // near-dup pair graphs are usually tiny relative to the corpus (only
     // dup docs appear); below the threshold a driver union-find costs one
-    // collect instead of one Spark round per cluster diameter. Above it,
-    // the distributed propagation takes over — same min-id labels. The
-    // null-endpoint census for the loop choice below rides in the same
-    // job as the edge count.
-    val census = e0.agg(count(lit(1)),
-      count_if(col("src").isNull || col("dst").isNull)).head()
-    val nEdges = census.getLong(0)
-    if (nEdges <= localThreshold) {
-      val spark = pairs.sparkSession
-      val dt = pairs.schema(aCol).dataType
-      val es = e0.collect().map(r => (r.get(0), r.get(1)))
-      e0.unpersist(false)
-      val parent = scala.collection.mutable.HashMap[Any, Any]()
-      def lt(a: Any, b: Any): Boolean = (a, b) match {
-        case (x: Number, y: Number) =>
-          x.longValue < y.longValue ||
-            (x.longValue == y.longValue && x.doubleValue < y.doubleValue)
-        case (x: String, y: String) => x.compareTo(y) < 0
-        case (x, y)                 => String.valueOf(x) < String.valueOf(y)
+    // collect instead of one Spark round per cluster diameter
+    val nEdges = e0.count()
+    val (labels, held) =
+      if (nEdges <= localThreshold) {
+        val es = e0.as[(Long, Long)].collect()
+        e0.unpersist(false)
+        (spark.sparkContext.parallelize(unionFind(es).toSeq, 1)
+          .toDF("doc_id", "comp"), None)
+      } else {
+        val (out, rdd) = propagateLabels(e0, maxIter, nEdges)
+        e0.unpersist(false)
+        (out, Some(rdd))
       }
-      def find(x: Any): Any = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent(r)
-        var c = x // path compression
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      es.foreach { case (a, b) =>
-        parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) { if (lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
-      }
-      val rows = parent.keys.toSeq.map(id => org.apache.spark.sql.Row(id, find(id)))
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id", dt),
-        org.apache.spark.sql.types.StructField("comp", dt)))
-      return (spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), schema), () => ())
+    val out = code match {
+      case None if dt == LongType => labels
+      case None => labels.select(col("doc_id").cast(dt).as("doc_id"),
+        col("comp").cast(dt).as("comp"))
+      case Some((c, _)) => labels
+        .join(c.select(col("code").as("doc_id"), col("id").as("__id")), "doc_id")
+        .join(c.select(col("code").as("comp"), col("id").as("__comp")), "comp")
+        .select(col("__id").as("doc_id"), col("__comp").as("comp"))
     }
-    // LongType ids (every in-repo caller) take the co-partitioned RDD
-    // loop (r15): one shuffle per round instead of three — see
-    // [[connectedComponentsRddLong]]. Null endpoints (pathological) and
-    // non-integral id types keep the generic DataFrame loop below.
-    if (pairs.schema(aCol).dataType ==
-          org.apache.spark.sql.types.LongType &&
-        pairs.schema(bCol).dataType ==
-          org.apache.spark.sql.types.LongType &&
-        census.getLong(1) == 0L) {
-      val (out, labels) = connectedComponentsRddLong(e0, maxIter, nEdges)
-      e0.unpersist(false)
-      return (out, () => labels.unpersist(false))
-    }
-    // Each round references the previous labels TWICE (propagation join +
-    // union), so a persist()-based loop — which caches data but keeps the
-    // full logical plan — doubles the plan tree per round: 2^k copies of
-    // the upstream pair-generation plan by round k, and Catalyst analysis
-    // plus the per-action plan stringification go combinatorial long
-    // before maxIter. localCheckpoint truncates the lineage to the
-    // materialized partitions each round, keeping every round's plan O(1).
-    // (Local checkpoints live in executor storage — on a deployment that
-    // must survive executor loss mid-CC, swap for reliable checkpoint()
-    // with a checkpoint dir; the loop structure is unchanged. Old rounds'
-    // blocks are reaped by the ContextCleaner once unreferenced; the label
-    // set only holds docs that appear in a dup pair, so it is small
-    // relative to the corpus.)
-    val edges = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(false)
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("comp", col("id")).localCheckpoint(false)
-    labels.count()
-    e0.unpersist(false)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val prop = edges.join(labels.withColumnRenamed("id", "src"), "src")
-        .select(col("dst").as("id"), col("comp"), lit(1).as("__o"))
-      // change detection folds into the min-label aggregation itself: the
-      // previous label is the min over origin-0 rows (labels side — every
-      // node has one), so `min(all) < min(origin-0)` marks a changed node.
-      // One count on the freshly checkpointed result then both materializes
-      // it AND decides convergence — the probe join of the naive
-      // formulation (labels ⋈ next per round, as large as the label set
-      // itself) disappears from every round.
-      val next = labels.select(col("id"), col("comp"), lit(0).as("__o"))
-        .union(prop)
-        .groupBy("id")
-        .agg(min("comp").as("comp"),
-          (min(col("comp")) < min(when(col("__o") === 0, col("comp")))).as("__chg"))
-        .localCheckpoint(false)
-      converged = next.filter(col("__chg")).count() == 0
-      labels = next.drop("__chg")
-      iter += 1
-    }
-    (labels.withColumnRenamed("id", "doc_id"), () => ())
+    (out, () => (held ++ code.map(_._2)).foreach(_.unpersist(false)))
   }
 
-  /** The long-id distributed CC loop (r15, guide §2.4 "remove shuffles
+  /** Min-id labels of a small edge list on the driver: a union-find whose
+    * root is the smallest id of its set, with path compression. */
+  private def unionFind(edges: Array[(Long, Long)]): Array[(Long, Long)] = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var c = x
+      while (c != r) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    parent.keys.toArray.map(id => id -> find(id))
+  }
+
+  private lazy val log = org.slf4j.LoggerFactory.getLogger("graft.operators.Dedup")
+
+  /** The distributed CC loop (r15, guide §2.4 "remove shuffles
     * outright"): min-label propagation over an RDD whose edge set and
     * label set share ONE HashPartitioner, so each round's propagation
     * join and convergence merge are narrow (zero-shuffle) and only the
-    * propagated (dst, comp) messages are exchanged — one shuffle per
-    * round where the DataFrame loop paid three (edges re-exchange +
-    * labels re-exchange for the join, plus the union/groupBy exchange;
-    * localCheckpoint erases partitioning info from Catalyst, so those
-    * could never be elided at the SQL layer). Lineage grows linearly
-    * (RDD, no Catalyst plan doubling); each round's labels are persisted
-    * and the previous round's blocks released.
+    * propagated (dst, comp) messages are exchanged: one shuffle per
+    * round. Lineage grows linearly (RDD, no Catalyst plan to re-analyse);
+    * each round's labels are persisted and the previous round's blocks
+    * released.
     *
-    * Semantics are EXACTLY the DataFrame loop's: per round every node
-    * takes the min of its own label and its neighbors' labels; converged
-    * when no label changed; labels start as the node's own id; output
-    * (doc_id, comp) for every node that occurs in a pair.
+    * Per round every node takes the min of its own label and its
+    * neighbours' labels; converged when no label changed; labels start as
+    * the node's own id; output (doc_id, comp) for every node that occurs
+    * in a pair. Rounds needed = cluster diameter; dup clusters are shallow
+    * (near-clique), so 2-4 rounds are typical. `maxIter` bounds
+    * adversarial chain graphs, and a WARN names the round count when it
+    * cuts the loop short (the labels are then not final).
     *
     * Partition count is scale-adaptive: directed-edge count / ~2M rows
     * per partition (≈32 MB of (long,long) entries), floored at the
@@ -720,7 +705,7 @@ object Dedup {
     *
     * Returns the labels and the persisted RDD they are read from, for the
     * caller to release once it has read them. */
-  private def connectedComponentsRddLong(
+  private def propagateLabels(
       e0: DataFrame,
       maxIter: Int,
       nEdges: Long): (DataFrame, org.apache.spark.rdd.RDD[_]) = {
@@ -782,6 +767,9 @@ object Dedup {
       changed = next.filter(_._2._2).mapValues(_._1)
       iter += 1
     }
+    if (!converged)
+      log.warn(s"connected components stopped at maxIter = $iter rounds with " +
+        "labels still changing: a cluster wider than that may be split")
     // the final labels are persisted (via `persisted`); the edge blocks
     // are no longer read — recomputation of a lost label block falls back
     // to the (recomputable) lineage, so releasing them early is safe

@@ -12,9 +12,20 @@ import org.apache.spark.sql.functions._
   * each round joins ranks to edges on `src` (shuffle 1) and sums
   * contributions by `dst` (shuffle 2); the dangling mass and the
   * convergence-free fixed iteration count keep every round's driver
-  * involvement to one scalar aggregate. Lineage is truncated per round
-  * with `localCheckpoint` exactly like the CC loop — without it the plan
-  * doubles per iteration. */
+  * involvement to one scalar aggregate.
+  *
+  * Lineage is truncated per round with `localCheckpoint`. A persist()-based
+  * loop caches data but keeps the full logical plan, so round k's plan
+  * would carry every earlier round's joins and aggregation, and Catalyst
+  * analysis plus the per-action plan stringification would grow with
+  * every round (a loop that reads the previous round twice, such as a
+  * min-label propagation over `labels ∪ messages`, doubles it: 2^k copies
+  * of the upstream plan by round k). localCheckpoint truncates the lineage
+  * to the materialized partitions, keeping every round's plan O(1). Local
+  * checkpoints live in executor storage: a deployment that must survive
+  * executor loss mid-loop swaps in a reliable checkpoint() with a
+  * checkpoint dir, and the loop is unchanged. Old rounds' blocks are
+  * reaped by the ContextCleaner once unreferenced. */
 object Graphs {
 
   /** Power-iteration PageRank. `edges` is a (srcCol, dstCol) edge list;

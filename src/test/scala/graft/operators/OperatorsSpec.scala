@@ -123,20 +123,84 @@ class OperatorsSpec extends AnyFunSuite {
     assert(kept.toSeq == Seq(1L, 10L, 20L, 99L))
   }
 
-  test("distributed components on pairs with a null endpoint take the DataFrame loop") {
-    // the long-id RDD loop cannot carry a null id, so a null endpoint must
-    // route the call to the generic loop (decided by the same job that
-    // counts the edges). There the null node sends nothing (a null key
-    // joins no label), so 2's and 3's clusters stay apart, while both
-    // neighbours' labels reach it and it takes their min
+  /** The labels (with their column types), the keepCanonical set and the
+    * componentStats histogram of `pairs`, on the driver union-find path
+    * and then on the distributed path. */
+  private def onBothPaths(pairs: org.apache.spark.sql.DataFrame,
+      docs: org.apache.spark.sql.DataFrame) = Seq(1000000L, 0L).map { t =>
+    val cc = Dedup.connectedComponents(pairs, localThreshold = t)
+    (cc.schema.map(_.dataType), cc.collect().map(r => r.get(0) -> r.get(1)).toSet,
+      Dedup.keepCanonical(docs, pairs, localThreshold = t).collect().map(_.get(0)).toSet,
+      Dedup.componentStats(pairs, localThreshold = t).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toSet)
+  }
+
+  test("components drop null-endpoint pairs on both paths") {
+    // a null id names no document: its pairs link nothing, so 1's and 3's
+    // clusters stay apart and no null row is labelled
     val pairs = Seq[(java.lang.Long, java.lang.Long)]((1L, 2L), (2L, null),
       (null, 3L), (3L, 4L), (5L, 6L)).toDF("doc_a", "doc_b")
-    val cc = Dedup.connectedComponents(pairs, localThreshold = 0L).collect()
-      .map(r => Option(r.get(0)) -> Option(r.get(1))).toMap
-    val expect = Map[Long, Long](1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 3L,
-      5L -> 5L, 6L -> 5L).map { case (k, v) => Option(k: Any) -> Option(v: Any) } +
-      (None -> Some(1L))
-    assert(cc == expect)
+    val docs = (1L to 6L).toDF("doc_id")
+    val Seq(local, dist) = onBothPaths(pairs, docs)
+    assert(local == dist)
+    val (_, labels, kept, stats) = local
+    assert(labels == Set(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 3L, 5L -> 5L, 6L -> 5L))
+    assert(kept == Set(1L, 3L, 5L))
+    assert(stats == Set(2L -> 3L))
+  }
+
+  test("components label String ids by Spark's ordering on both paths") {
+    // "｡" (U+FF61) sorts below "😀" (U+1F600) by UTF-8 bytes, as Spark's
+    // min and ORDER BY compare strings, but above it by UTF-16 units
+    val pairs = Seq(("｡", "😀"), ("b", "a"), ("a", "c"), ("y", "x"))
+      .toDF("doc_a", "doc_b")
+    val docs = Seq("｡", "😀", "a", "b", "c", "x", "y", "z").toDF("doc_id")
+    val Seq(local, dist) = onBothPaths(pairs, docs)
+    assert(local == dist)
+    val (types, labels, kept, _) = local
+    assert(types == Seq.fill(2)(pairs.schema("doc_a").dataType))
+    assert(labels == Set("｡" -> "｡", "😀" -> "｡", "a" -> "a", "b" -> "a",
+      "c" -> "a", "x" -> "x", "y" -> "x"))
+    assert(kept == Set("｡", "a", "x", "z"))
+  }
+
+  test("components keep Int ids Int on both paths") {
+    val pairs = Seq((3, 2), (2, 1), (10, 11), (-5, 10)).toDF("doc_a", "doc_b")
+    val docs = Seq(1, 2, 3, 10, 11, -5, 7).toDF("doc_id")
+    val Seq(local, dist) = onBothPaths(pairs, docs)
+    assert(local == dist)
+    val (types, labels, kept, _) = local
+    assert(types == Seq.fill(2)(pairs.schema("doc_a").dataType))
+    assert(labels == Set(1 -> 1, 2 -> 1, 3 -> 1, -5 -> -5, 10 -> -5, 11 -> -5))
+    assert(kept == Set(1, -5, 7))
+  }
+
+  test("distributed components warn when maxIter cuts them short") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{Configurator, Property}
+    val warned = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val app = new AbstractAppender("dedup-warn", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.WARN) warned.add(e.getMessage.getFormattedMessage)
+    }
+    app.start()
+    val name = "graft.operators.Dedup"
+    Configurator.setLevel(name, Level.WARN)
+    val logger = LogManager.getLogger(name).asInstanceOf[Logger]
+    logger.addAppender(app)
+    try {
+      // the chain 1-2-...-8 needs 8 rounds: 20 converge, 2 do not
+      val chain = (1L until 8L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+      Dedup.connectedComponents(chain, maxIter = 20, localThreshold = 0L).collect()
+      assert(warned.isEmpty, warned)
+      Dedup.connectedComponents(chain, maxIter = 2, localThreshold = 0L).collect()
+      assert(warned.size == 1 && warned.peek.contains("maxIter = 2 rounds"), warned)
+    } finally {
+      logger.removeAppender(app)
+      Configurator.setLevel(name, LogManager.getRootLogger.getLevel)
+    }
   }
 
   test("keepBest keeps the highest-score member per cluster, ties to lowest id") {

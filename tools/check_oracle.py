@@ -1,3 +1,7 @@
+# Compares each Verify output under <outDir> with its DuckDB oracle query
+# (oracle_sql.json) over the sf parquet tables, as multisets.
+# Usage: check_oracle.py <sfDir> <outDir>. Exits 1 if any oracle fails or
+# has no output.
 import duckdb, json, glob, os, sys, math
 sf = sys.argv[1] if len(sys.argv) > 1 else '/root/testdata/sf0.01'
 out = sys.argv[2] if len(sys.argv) > 2 else '/tmp/verify_out'
@@ -35,3 +39,4 @@ for name, sql in sorted(oracle.items()):
 for n, msg in fails:
     print(f'FAIL {n}: {msg[:400]}')
 print(f'\n{len(oracle)-len(fails)}/{len(oracle)} match')
+sys.exit(1 if fails else 0)
