@@ -7,8 +7,10 @@ package graft.functions
   *
   * Implementations hold their state in fields and must be serializable —
   * in streaming mode the instance is checkpointed across micro-batches
-  * (kryo), in batch mode it lives for one partition scan. WHEN gating and
-  * last-result replay are applied by the engine around this call.
+  * (Java serialization for direct `OVER (PARTITION BY ...)` analytics,
+  * kryo inside window-path state), in batch mode it lives for one
+  * partition scan. WHEN gating and last-result replay are applied by the
+  * engine around this call.
   */
 trait CustomAnalytic extends Serializable {
   def apply(value: Any): Any

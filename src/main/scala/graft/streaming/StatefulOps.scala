@@ -92,6 +92,13 @@ object StatefulOps extends Serializable {
       }(Encoders.row(outSchema))
   }
 
+  /** `df` grouped by its key columns, rendered as one string. */
+  private def byKeyString(df: DataFrame, keyNames: List[String]) = {
+    val keyIdx = keyNames.map(df.schema.fieldIndex)
+    df.groupByKey(r =>
+      keyIdx.map(i => if (r.isNullAt(i)) KEYNULL else String.valueOf(r.get(i))).mkString(KEYSEP))(Encoders.STRING)
+  }
+
   private def singleRowCtx(m: Map[String, Any]): RowEval.Ctx =
     RowEval.Ctx(IndexedSeq(m), IndexedSeq((0, "")), 0L, Some(0), Map.empty, Set.empty)
 
@@ -222,9 +229,7 @@ object StatefulOps extends Serializable {
         Seq(ws, we) ++ anVals)
     }
 
-    val keyIdx = keyNames.map(schema.fieldIndex)
-    val grouped = df.groupByKey(r =>
-      keyIdx.map(i => if (r.isNullAt(i)) KEYNULL else String.valueOf(r.get(i))).mkString(KEYSEP))(Encoders.STRING)
+    val grouped = byKeyString(df, keyNames)
 
     type CState = (Vector[Map[String, Any]], Map[String, AnState])
     if (df.isStreaming) {
@@ -346,9 +351,7 @@ object StatefulOps extends Serializable {
       (out.result(), Some((accs, wstart)))
     }
 
-    val keyIdx = keyNames.map(schema.fieldIndex)
-    val grouped = df.groupByKey(r =>
-      keyIdx.map(i => if (r.isNullAt(i)) KEYNULL else String.valueOf(r.get(i))).mkString(KEYSEP))(Encoders.STRING)
+    val grouped = byKeyString(df, keyNames)
 
     if (df.isStreaming) {
       val fn = (_: String, it: Iterator[Row], state: GroupState[GState]) => {
@@ -376,8 +379,12 @@ object StatefulOps extends Serializable {
   // ------------------------------------------------ streaming analytics
 
   /** Analytic state per call (reference: stream/analytic.go state machines +
-    * functions/functions_analytical.go). Serialized via kryo across
-    * micro-batches. */
+    * functions/functions_analytical.go). Streaming [[analytics]] /
+    * [[analyticsTws]] keep it between micro-batches as [[AnStateCodec]]
+    * bytes, which hold only the fields the call's kind reads; the window
+    * paths ([[countingWindow]], [[sessionWindowAnalytics]],
+    * [[tumblingWindowAnalytics]]) keep it by call name inside their
+    * kryo-encoded state. */
   private[streaming] final case class AnState(
       var lagBuf: Vector[Any] = Vector.empty,
       var latest: Any = null,
@@ -469,10 +476,43 @@ object StatefulOps extends Serializable {
   }
 
 
+  /** The direct-path analytics of one query: its output schema and the
+    * per-key step both streaming lowerings run, with the per-call states
+    * kept between micro-batches as [[AnStateCodec]] bytes. */
+  private[streaming] final class DirectAnalytics(
+      schema: StructType, calls: List[(FuncCall, String)],
+      ordName: String, tieName: Option[String]) extends Serializable {
+    private val names = schema.fieldNames
+    val outSchema: StructType = StructType(schema.fields.toList ++
+      calls.map { case (fc, n) => StructField(n, analyticType(fc, schema), nullable = true) })
+    val codec = new AnStateCodec(calls.map(_._1))
+    private val customReg = customSnapshot()
+
+    /** Rows of one key, in event order, through the calls' states. */
+    def run(states: Array[AnState], rows: Iterator[Map[String, Any]]): Iterator[Row] =
+      rows.map { m =>
+        val vals = names.map(m(_)) ++ calls.iterator.zipWithIndex.map { case ((fc, n), i) =>
+          coerce(applyAnalytic(fc, states(i), m, customReg), outSchema(n).dataType)
+        }
+        Row.fromSeq(vals.toIndexedSeq)
+      }
+
+    /** One key's micro-batch: decode its state, sort the rows into event
+      * order, run them, encode the state back. */
+    def step(prev: Option[AnBytes], input: Iterator[Row]): (Vector[Row], AnBytes) = {
+      val rows = input.map(r => rowToMap(names, r)).toVector
+        .sortWith(ordLess(_, _, ordName, tieName))
+      val states = prev.fold(codec.fresh())(p => codec.decode(p.bytes))
+      val out = run(states, rows.iterator).toVector
+      (out, AnBytes(codec.encode(states)))
+    }
+  }
+
   /** Streaming lowering of the direct-path analytics. All calls must share
     * one partition spec (the reference keeps independent per-call state;
     * a shared groupByKey keeps this a single shuffle).
-    * Output = input columns + one column per call. */
+    * Output = input columns + one column per call. Each key's state is
+    * one [[AnBytes]] value (see [[AnStateCodec]] for the layout). */
   def analytics(
       df: DataFrame,
       calls: List[(FuncCall, String)],
@@ -480,46 +520,17 @@ object StatefulOps extends Serializable {
       ordName: String,
       tieName: Option[String] = None,
       ttlMs: Long = 0L): DataFrame = {
-
-    val schema = df.schema
-    val names = schema.fieldNames
-
-    val outSchema = StructType(schema.fields.toList ++
-      calls.map { case (fc, n) => StructField(n, analyticType(fc, schema), nullable = true) })
-
-    val customReg = customSnapshot()
-    def apply1(fc: FuncCall, st: AnState, m: Map[String, Any]): Any =
-      applyAnalytic(fc, st, m, customReg)
-
-
-    def processRows(states: scala.collection.mutable.Map[String, AnState],
-        rows: Seq[Map[String, Any]]): Iterator[Row] =
-      rows.iterator.map { m =>
-        val vals = names.map(m(_)) ++ calls.map { case (fc, n) =>
-          val st = states.getOrElseUpdate(n, AnState())
-          coerce(apply1(fc, st, m), outSchema(n).dataType)
-        }
-        Row.fromSeq(vals.toIndexedSeq)
-      }
-
-    val keyIdx = partitionNames.map(schema.fieldIndex)
-    val grouped = df.groupByKey(r =>
-      keyIdx.map(i => if (r.isNullAt(i)) KEYNULL else String.valueOf(r.get(i))).mkString(KEYSEP))(Encoders.STRING)
-
+    val an = new DirectAnalytics(df.schema, calls, ordName, tieName)
     if (df.isStreaming) {
-      val fn = (_: String, it: Iterator[Row], state: GroupState[Map[String, AnState]]) => {
+      val fn = (_: String, it: Iterator[Row], state: GroupState[AnBytes]) => {
         if (state.hasTimedOut) {
           // STATETTL reaps the idle key's analytic state wholesale
           // (reference: LRU partition eviction, stream/analytic.go:18-21)
           state.remove()
           Iterator.empty
         } else {
-          val rows = it.map(r => rowToMap(names, r)).toVector
-            .sortWith(ordLess(_, _, ordName, tieName))
-          val states = scala.collection.mutable.Map[String, AnState]() ++
-            state.getOption.getOrElse(Map.empty)
-          val out = processRows(states, rows).toVector
-          state.update(states.toMap)
+          val (out, next) = an.step(state.getOption, it)
+          state.update(next)
           if (ttlMs > 0) state.setTimeoutDuration(ttlMs)
           out.iterator
         }
@@ -527,21 +538,22 @@ object StatefulOps extends Serializable {
       val timeout =
         if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout
         else GroupStateTimeout.NoTimeout
-      grouped.flatMapGroupsWithState(OutputMode.Append, timeout)(fn)(
-        Encoders.kryo[Map[String, AnState]], Encoders.row(outSchema))
+      byKeyString(df, partitionNames).flatMapGroupsWithState(OutputMode.Append, timeout)(fn)(
+        Encoders.product[AnBytes], Encoders.row(an.outSchema))
     } else {
-      perKeySortedBatch(df, partitionNames, ordName, tieName, outSchema) { () =>
-        val states = scala.collection.mutable.Map[String, AnState]()
-        ((m: Map[String, Any]) => processRows(states, Seq(m)),
+      perKeySortedBatch(df, partitionNames, ordName, tieName, an.outSchema) { () =>
+        val states = an.codec.fresh()
+        ((m: Map[String, Any]) => an.run(states, Iterator.single(m)),
           () => Iterator.empty[Row])
       }
     }
   }
 
   /** [[analytics]] on Spark 4's `transformWithState` (STATEOP='tws'):
-    * same per-key state machines hosted in a [[org.apache.spark.sql.streaming.StatefulProcessor]],
-    * with the state-store-native TTL (`TTLConfig`) doing the idle-key
-    * reaping the reference implements as LRU eviction
+    * the same per-key step and state bytes hosted in a
+    * [[org.apache.spark.sql.streaming.StatefulProcessor]], with the
+    * state-store-native TTL (`TTLConfig`) doing the idle-key reaping the
+    * reference implements as LRU eviction
     * (reference: stream/analytic.go:18-21,386-394). Requires the RocksDB
     * state-store provider (`StreamSql.useRocksDBStateStore()`). */
   def analyticsTws(
@@ -553,39 +565,23 @@ object StatefulOps extends Serializable {
       ttlMs: Long = 0L): DataFrame = {
     import org.apache.spark.sql.streaming.{StatefulProcessor, TimeMode, TTLConfig, ValueState}
 
-    val schema = df.schema
-    val names = schema.fieldNames
-    val outSchema = StructType(schema.fields.toList ++
-      calls.map { case (fc, n) => StructField(n, analyticType(fc, schema), nullable = true) })
-    val keyIdx = partitionNames.map(schema.fieldIndex)
-    val customReg = customSnapshot()
+    val an = new DirectAnalytics(df.schema, calls, ordName, tieName)
 
     final class AnalyticsProcessor extends StatefulProcessor[String, Row, Row] {
-      @transient private var anState: ValueState[Map[String, AnState]] = _
+      @transient private var anState: ValueState[AnBytes] = _
 
       override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
         val ttl =
           if (ttlMs > 0) new TTLConfig(java.time.Duration.ofMillis(ttlMs))
           else TTLConfig.NONE
-        anState = getHandle.getValueState[Map[String, AnState]](
-          "an", Encoders.kryo[Map[String, AnState]], ttl)
+        anState = getHandle.getValueState[AnBytes]("an", Encoders.product[AnBytes], ttl)
       }
 
       override def handleInputRows(
           key: String, inputRows: Iterator[Row],
           timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[Row] = {
-        val rows = inputRows.map(r => rowToMap(names, r)).toVector
-          .sortWith(ordLess(_, _, ordName, tieName))
-        val states = scala.collection.mutable.Map[String, AnState]() ++
-          (if (anState.exists()) anState.get() else Map.empty[String, AnState])
-        val out = rows.map { m =>
-          val vals = names.map(m(_)) ++ calls.map { case (fc, n) =>
-            val st = states.getOrElseUpdate(n, AnState())
-            coerce(applyAnalytic(fc, st, m, customReg), outSchema(n).dataType)
-          }
-          Row.fromSeq(vals.toIndexedSeq)
-        }
-        anState.update(states.toMap)
+        val (out, next) = an.step(Option.when(anState.exists())(anState.get()), inputRows)
+        anState.update(next)
         out.iterator
       }
     }
@@ -593,10 +589,9 @@ object StatefulOps extends Serializable {
     // state TTL is only legal under ProcessingTime time mode (Spark rejects
     // TTLConfig with TimeMode.None at query start)
     val timeMode = if (ttlMs > 0) TimeMode.ProcessingTime() else TimeMode.None()
-    df.groupByKey(r =>
-        keyIdx.map(i => if (r.isNullAt(i)) KEYNULL else String.valueOf(r.get(i))).mkString(KEYSEP))(Encoders.STRING)
+    byKeyString(df, partitionNames)
       .transformWithState(new AnalyticsProcessor, timeMode, OutputMode.Append())(
-        Encoders.row(outSchema))
+        Encoders.row(an.outSchema))
   }
 
   /** Output type of a direct-path analytic call (shared by the fMGWS and
@@ -705,9 +700,7 @@ object StatefulOps extends Serializable {
       (out.result(), SessState(open, maxTs, states.toMap, horizon))
     }
 
-    val keyIdx = keyNames.map(schema.fieldIndex)
-    val grouped = df.groupByKey(r =>
-      keyIdx.map(i => if (r.isNullAt(i)) KEYNULL else String.valueOf(r.get(i))).mkString(KEYSEP))(Encoders.STRING)
+    val grouped = byKeyString(df, keyNames)
 
     if (df.isStreaming) {
       val fn = (_: String, it: Iterator[Row], state: GroupState[SessState]) => {
@@ -861,9 +854,7 @@ object StatefulOps extends Serializable {
       (out.result(), TwState(bufs, maxTs, states.toMap, horizon))
     }
 
-    val keyIdx = keyNames.map(schema.fieldIndex)
-    val grouped = df.groupByKey(r =>
-      keyIdx.map(i => if (r.isNullAt(i)) KEYNULL else String.valueOf(r.get(i))).mkString(KEYSEP))(Encoders.STRING)
+    val grouped = byKeyString(df, keyNames)
 
     if (df.isStreaming) {
       val fn = (_: String, it: Iterator[Row], state: GroupState[TwState]) => {

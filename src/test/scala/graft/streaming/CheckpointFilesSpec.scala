@@ -11,10 +11,11 @@ import scala.jdk.CollectionConverters._
 import jdk.jfr.consumer.RecordingStream
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery, StreamingQueryException}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.{GraftEngine, SparkTestBase}
 
@@ -164,6 +165,38 @@ class CheckpointFilesSpec extends AnyFunSuite {
           s"restart ${first.getOrElse("stock")} -> ${second.getOrElse("stock")}")
       }
     }
+  }
+
+  test("a checkpoint holding kryo-encoded analytics state fails at restart") {
+    implicit val ctx = spark.sqlContext
+    val mem = MemoryStream[Ev]
+    val ckpt = tempDir()
+    val out = ArrayBuffer[(String, Long, Double)]()
+    // the analytics state format before AnBytes: per key (the key columns
+    // rendered as one string), a kryo-encoded map from call name to AnState
+    type Old = Map[String, StatefulOps.AnState]
+    val old = mem.toDF().groupByKey(_.getAs[String]("deviceId"))(Encoders.STRING)
+      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
+        (_: String, it: Iterator[Row], st: GroupState[Old]) => {
+          val rows = it.toVector
+          val acc = StatefulOps.AnState(started = true)
+          rows.foreach(r => acc.acc.add(r.getAs[Double]("temperature")))
+          st.update(Map("__an_0" -> acc))
+          rows.iterator.map(r => (r.getAs[String]("deviceId"), r.getAs[Long]("ts"), acc.acc.sum))
+        })(Encoders.kryo[Old],
+        Encoders.tuple(Encoders.STRING, Encoders.scalaLong, Encoders.scalaDouble))
+      .toDF()
+    def run(df: DataFrame, evs: Seq[Ev]): Unit = {
+      val q = start(df, out, Some(ckpt))
+      try { mem.addData(evs: _*); q.processAllAvailable() }
+      finally SparkTestBase.stopQuietly(q)
+    }
+    run(old, Seq(Ev("d1", 1, 1000, "a"), Ev("d2", 10, 1100, "a")))
+    assert(out.size == 2)
+    val e = intercept[StreamingQueryException](
+      run(keyed(mem), Seq(Ev("d1", 4, 2000, "a"))))
+    assert(e.getMessage.contains("STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE"), e.getMessage)
+    assert(out.size == 2, "no row may come from the old state")
   }
 
   test("the committed checkpoint file set matches the stock filesystem's") {
