@@ -316,7 +316,8 @@ object Bench {
       "smoke stages report MIN over draws (box contention is one-sided " +
       "noise; per-draw lists published in scale_smoke_draws / " +
       "heavy_draws for audit). Carried from r11/r12: latency section " +
-      "FIRST (fresh JVM, partitions=8/RocksDB confs restored after); " +
+      "FIRST (fresh JVM, partitions=8 restored after; three rule shapes, " +
+      "rule_analytic_tws dropped with its lowering); " +
       "untimed warm-up pass before timing (JIT/codegen/page cache); " +
       "noop sink; driver GC between smoke passes (stale shuffle files " +
       "otherwise pile up - PackTune A/B at 20M: 27s pass1 -> 122s " +
@@ -418,15 +419,6 @@ object Bench {
       // commits per trigger — 8 is the deployment-appropriate setting for
       // this shape (the batch-throughput queries below keep 32)
       spark.conf.set("spark.sql.shuffle.partitions", "8")
-      // the analytic rule additionally measured on the transformWithState
-      // lowering (STATEOP='tws', RocksDB-backed state); only the tws shape
-      // switches the provider — rule_analytic stays on the default store so
-      // its numbers remain comparable across rounds
-      val latencyShapes = ruleShapes0 ++ List(
-        "rule_analytic_tws" ->
-          ("SELECT user_id, value, lag(value) OVER (PARTITION BY user_id) AS prev " +
-            "FROM stream " +
-            "WITH (TIMESTAMP='ts', TIMEUNIT='ms', TIEBREAK='event_id', STATEOP='tws')"))
       // pinned quiet-box per-shape references (the r14 end-of-round
       // full-fidelity run, corroborated by r13's 142/130/444/847 for the
       // first three) — only used to set the latency_degraded disclosure
@@ -436,7 +428,7 @@ object Bench {
       // (noted in the artifact notes string).
       val latencyQuietRef = Map(
         "rule_filter" -> 144.0, "rule_transform" -> 119.0,
-        "rule_analytic" -> 322.0, "rule_analytic_tws" -> 406.0)
+        "rule_analytic" -> 322.0)
       // repeat-draw shed: the whole latency section historically cost
       // ~1-2 quiet minutes; if the box is so contended that the measured
       // draws alone have consumed 300 s, further draws spend budget the
@@ -444,12 +436,7 @@ object Bench {
       // of silently starving the sections that follow
       val latencyT0 = System.nanoTime()
       def latencySectionSec: Double = (System.nanoTime() - latencyT0) / 1e9
-      latencyShapes.foreach { case (name, sql) =>
-        if (name.endsWith("_tws"))
-          spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        else
-          spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      ruleShapes0.foreach { case (name, sql) =>
         // the feed carries epoch-ms longs, so any WITH options must gain
         // TIMEUNIT='ms'; fail loudly if the rule-shape string drifted and
         // the rewrite no-ops (a silent no-op corrupts the latency numbers)
@@ -508,10 +495,9 @@ object Bench {
       // looks identical to a healthy one in the artifact (r14 advice)
       System.err.println(s"[bench] latency section failed: $t")
     } finally {
-      // restore batch-stage settings — r7 leaked partitions=8 + RocksDB
-      // provider from here into everything that followed
+      // restore batch-stage settings — r7 leaked partitions=8 from here
+      // into everything that followed
       spark.conf.set("spark.sql.shuffle.partitions", cpus)
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
     writeArtifact()
 

@@ -20,8 +20,8 @@ import graft.sql._
   *    `last(struct(result)) IGNORE NULLS` over an unbounded-preceding frame
   *    (struct-wrapping distinguishes "no previous result" from a NULL result).
   *
-  * In streaming mode the same calls lower to transformWithState operators
-  * instead (graft.streaming).
+  * In streaming mode the same calls run as per-key state machines on
+  * `flatMapGroupsWithState` instead ([[graft.streaming.StatefulOps.analytics]]).
   */
 object AnalyticsLowering {
 

@@ -123,6 +123,20 @@ final class PlanBuilder(tables: Map[String, DataFrame]) {
     OrderCols(ts, tsName.map(col).toList ++ tiebreak.toList)
   }
 
+  /** The stateful operators' `WITH` durations in ms (0 when unset):
+    * STATETTL, IDLETIMEOUT, and the event-time delay MAXOUTOFORDERNESS +
+    * ALLOWEDLATENESS. ALLOWEDLATENESS extends the watermark delay of the
+    * declarative windows and the absorption horizon of the stateful ones
+    * alike (late rows inside it still join their window; beyond it they
+    * drop). */
+  private case class StateDurations(ttlMs: Long, idleMs: Long, delayMs: Long)
+
+  private def stateDurations(q: Query): StateDurations = {
+    def ms(k: String) = q.options.get(k).map(Durations.toMillis).getOrElse(0L)
+    StateDurations(ms("STATETTL"), ms("IDLETIMEOUT"),
+      ms("MAXOUTOFORDERNESS") + ms("ALLOWEDLATENESS"))
+  }
+
   // ------------------------------------------------------------ direct path
 
   /** Per-row pipeline: analytics → WHERE → projection → unnest →
@@ -195,17 +209,8 @@ final class PlanBuilder(tables: Map[String, DataFrame]) {
         d = d.withColumn("__ord_ms", unix_millis(evts))
         val named = analyticCalls.distinct.zipWithIndex
           .map { case (c, i) => (c, s"__an_$i") }
-        // STATEOP='tws' selects the transformWithState lowering (Spark 4
-        // operator with state-store-native TTL); default is fMGWS
-        val lowered =
-          if (df0.isStreaming && q.options.get("STATEOP").exists(_.equalsIgnoreCase("tws")))
-            graft.streaming.StatefulOps.analyticsTws(d, named, pNames, "__ord_ms",
-              tieName = q.options.get("TIEBREAK"),
-              ttlMs = q.options.get("STATETTL").map(Durations.toMillis).getOrElse(0L))
-          else
-            graft.streaming.StatefulOps.analytics(d, named, pNames, "__ord_ms",
-              tieName = q.options.get("TIEBREAK"),
-              ttlMs = q.options.get("STATETTL").map(Durations.toMillis).getOrElse(0L))
+        val lowered = graft.streaming.StatefulOps.analytics(d, named, pNames, "__ord_ms",
+          tieName = q.options.get("TIEBREAK"), ttlMs = stateDurations(q).ttlMs)
         (lowered, named.toMap)
       } else AnalyticsLowering.lower(
         df0, analyticCalls,
@@ -290,6 +295,7 @@ final class PlanBuilder(tables: Map[String, DataFrame]) {
     }
 
     val isStream = df0.isStreaming
+    val dur = stateDurations(q)
 
     // group keys as materialized columns (supports scalar-function keys,
     // reference: rsql/ast.go:722-734, stream/processor_field.go:205-219)
@@ -347,8 +353,7 @@ final class PlanBuilder(tables: Map[String, DataFrame]) {
         val d = pre.withColumn("__ord_ms", unix_millis(needTs))
         Some(graft.streaming.StatefulOps.countingWindow(
           d, keyNames, n, slots.toList, "__ord_ms",
-          ttlMs = q.options.get("STATETTL").map(Durations.toMillis).getOrElse(0L),
-          tieName = q.options.get("TIEBREAK"),
+          ttlMs = dur.ttlMs, tieName = q.options.get("TIEBREAK"),
           anCalls = if (windowAnalytics.isEmpty) Nil else statefulAnNamed()))
       case Some(GlobalWindow(Some(trig))) =>
         val d = pre.withColumn("__ord_ms", unix_millis(needTs))
@@ -365,28 +370,16 @@ final class PlanBuilder(tables: Map[String, DataFrame]) {
           case _                    => throw new MatchError(w)
         }
         val d = pre.withColumn("__ord_ms", unix_millis(needTs))
-        // ALLOWEDLATENESS extends the absorption horizon here exactly like
-        // the declarative watermark path (late rows inside it still join
-        // their window; beyond it they drop)
-        val oooMs = q.options.get("MAXOUTOFORDERNESS")
-          .map(Durations.toMillis).getOrElse(0L) +
-          q.options.get("ALLOWEDLATENESS").map(Durations.toMillis).getOrElse(0L)
         Some(graft.streaming.StatefulOps.tumblingWindowAnalytics(
-          d, keyNames, size, slots.toList, statefulAnNamed(), "__ord_ms", oooMs,
+          d, keyNames, size, slots.toList, statefulAnNamed(), "__ord_ms", dur.delayMs,
           tieName = q.options.get("TIEBREAK"), slideMs = slide,
-          idleMs = q.options.get("IDLETIMEOUT").map(Durations.toMillis).getOrElse(0L),
-          ttlMs = q.options.get("STATETTL").map(Durations.toMillis).getOrElse(0L)))
+          idleMs = dur.idleMs, ttlMs = dur.ttlMs))
       case Some(SessionWindow(gap)) if isStream &&
           (windowAnalytics.nonEmpty || q.options.contains("IDLETIMEOUT")) =>
         val d = pre.withColumn("__ord_ms", unix_millis(needTs))
-        val oooMs = q.options.get("MAXOUTOFORDERNESS")
-          .map(Durations.toMillis).getOrElse(0L) +
-          q.options.get("ALLOWEDLATENESS").map(Durations.toMillis).getOrElse(0L)
         Some(graft.streaming.StatefulOps.sessionWindowAnalytics(
-          d, keyNames, gap, slots.toList, statefulAnNamed(), "__ord_ms", oooMs,
-          tieName = q.options.get("TIEBREAK"),
-          idleMs = q.options.get("IDLETIMEOUT").map(Durations.toMillis).getOrElse(0L),
-          ttlMs = q.options.get("STATETTL").map(Durations.toMillis).getOrElse(0L)))
+          d, keyNames, gap, slots.toList, statefulAnNamed(), "__ord_ms", dur.delayMs,
+          tieName = q.options.get("TIEBREAK"), idleMs = dur.idleMs, ttlMs = dur.ttlMs))
       case _ => None
     }
 
@@ -405,13 +398,8 @@ final class PlanBuilder(tables: Map[String, DataFrame]) {
     def evtCol: Column = {
       if (isTimeWindow) {
         pre = pre.withColumn("__evt", needTs)
-        if (isStream) {
-          val ooo = q.options.get("MAXOUTOFORDERNESS")
-            .map(Durations.toMillis).getOrElse(0L)
-          val late = q.options.get("ALLOWEDLATENESS")
-            .map(Durations.toMillis).getOrElse(0L)
-          pre = pre.withWatermark("__evt", s"${ooo + late} milliseconds")
-        }
+        if (isStream)
+          pre = pre.withWatermark("__evt", s"${dur.delayMs} milliseconds")
       }
       col("__evt")
     }

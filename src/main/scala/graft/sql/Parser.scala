@@ -93,6 +93,8 @@ final class Parser(tokens: Vector[Token]) {
       expectPunct("(")
       while (!cur.is(")")) {
         val k = parseIdentName().toUpperCase
+        if (!Parser.WithKeys.contains(k))
+          fail(s"unknown WITH option '$k' (expected one of ${Parser.WithKeys.mkString(", ")})")
         expectPunct("=")
         val v = cur.kind match {
           case StringTok => advance().text
@@ -589,6 +591,11 @@ final class Parser(tokens: Vector[Token]) {
 }
 
 object Parser {
+  /** The `WITH (...)` keys the engine reads; any other key is a parse error,
+    * so a misspelled option fails instead of silently doing nothing. */
+  val WithKeys: List[String] = List("TIMESTAMP", "TIMEUNIT", "TIEBREAK",
+    "MAXOUTOFORDERNESS", "ALLOWEDLATENESS", "IDLETIMEOUT", "STATETTL")
+
   /** Single-query entry point — rejects set-operation statements (use
     * [[parseStatement]]) instead of silently truncating at the keyword. */
   def parse(sql: String): Query = {

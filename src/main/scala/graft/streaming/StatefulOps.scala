@@ -1,6 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
@@ -11,18 +13,21 @@ import graft.cep.RowEval
   * and Spark cannot express declaratively: counting windows
   * (reference: window/counting_window.go), GLOBAL WINDOW TRIGGER WHEN
   * (reference: window/global_window.go:50-58,197-253 — running aggregates,
-  * fire-and-purge), and streaming analytics
-  * (reference: stream/analytic.go).
+  * fire-and-purge), streaming analytics (reference: stream/analytic.go),
+  * and streaming tumbling, sliding and session windows with analytics
+  * across successive windows.
   *
-  * Both execution modes share the per-key logic: batch runs it via the
-  * secondary-sort formulation ([[perKeySortedBatch]] — repartition on
-  * keys, spillable external sort, incremental per-key processing, the
-  * same shape as batch CEP); streaming via `flatMapGroupsWithState` with
-  * the same state carried across micro-batches. Keys distribute across
-  * executors — per-key state is bounded (buffer ≤ window size / open
-  * windows only; global windows O(1)), so the operator scales with the
-  * number of keys, and a skewed key spills in the sort instead of
-  * materializing its history in one task's heap.
+  * Streaming runs every operator through one keyed-state runner
+  * ([[runKeyed]]): one `flatMapGroupsWithState` per operator carries the
+  * operator's per-key state across micro-batches, under one IDLETIMEOUT /
+  * STATETTL timeout policy. Batch global windows and batch analytics with
+  * a user analytic run the same per-key logic via the secondary-sort
+  * formulation ([[perKeySortedBatch]] — repartition on keys, spillable
+  * external sort, incremental per-key processing, the same shape as batch
+  * CEP). Keys distribute across executors — per-key state is bounded
+  * (buffer ≤ window size / open windows only; global windows O(1)), so the
+  * operator scales with the number of keys, and a skewed key spills in the
+  * sort instead of materializing its history in one task's heap.
   */
 object StatefulOps extends Serializable {
 
@@ -45,6 +50,9 @@ object StatefulOps extends Serializable {
 
   private def rowToMap(names: Array[String], r: Row): Map[String, Any] =
     names.zipWithIndex.map { case (n, i) => n -> r.get(i) }.toMap
+
+  private def toMaps(names: Array[String], rows: Iterator[Row]): Vector[Map[String, Any]] =
+    rows.map(rowToMap(names, _)).toVector
 
   /** Secondary-sort batch runner (same shape as batch CEP,
     * [[graft.cep.CepExec]]): repartition on the key columns, Spark's
@@ -92,11 +100,70 @@ object StatefulOps extends Serializable {
       }(Encoders.row(outSchema))
   }
 
-  /** `df` grouped by its key columns, rendered as one string. */
-  private def byKeyString(df: DataFrame, keyNames: List[String]) = {
+  /** The streaming runner of every keyed operator: `df` grouped by its key
+    * columns, rendered as one string, through one `flatMapGroupsWithState`
+    * that keeps the operator's per-key state `S` (encoded by `stateEnc`)
+    * between micro-batches.
+    *
+    * `step(prev, rows, closeAll)` runs one key's micro-batch and returns
+    * its output rows and next state; `closeAll` asks a window operator to
+    * close every open window (the IDLETIMEOUT flush, which has no rows).
+    * `open` tells whether a state still holds open windows, and `carry`
+    * whether the operator keeps analytic state across windows.
+    *
+    * Timeout policy. A key with neither open windows nor carried state
+    * holds nothing worth keeping and is dropped, so high-cardinality
+    * ephemeral keys don't accrete (trade-off: its lateness horizon goes
+    * with it, so a row later than the key's whole flushed history starts a
+    * fresh stream — the reference's own behavior once STATETTL / LRU
+    * eviction reaps a key). Otherwise a key's timeout is re-armed on every
+    * update: IDLETIMEOUT (`idleMs`) if set, else STATETTL (`ttlMs`).
+    *  - With no IDLETIMEOUT the timeout is the STATETTL reap: the key's
+    *    state — partial windows and analytic state — goes wholesale
+    *    (reference: counting_window.go:254-267; LRU partition eviction,
+    *    stream/analytic.go:18-21), with no re-arm, or a quiet stream
+    *    busy-loops on timeout batches.
+    *  - An IDLETIMEOUT flushes the key's open windows on processing time
+    *    (reference: window/watermark.go:108-124). It is not a reap: carried
+    *    analytic state is retained, and when STATETTL is set as well and
+    *    the flush emitted something, the key is reaped on the next TTL
+    *    expiry instead. */
+  private def runKeyed[S](
+      df: DataFrame, keyNames: List[String], outSchema: StructType,
+      stateEnc: Encoder[S], idleMs: Long = 0L, ttlMs: Long = 0L,
+      carry: Boolean = true, open: S => Boolean = (_: S) => false)(
+      step: (Option[S], Iterator[Row], Boolean) => (Vector[Row], S)): DataFrame = {
     val keyIdx = keyNames.map(df.schema.fieldIndex)
+    val fn = (_: String, it: Iterator[Row], state: GroupState[S]) =>
+      if (!state.hasTimedOut) {
+        val (out, st) = step(state.getOption, it, false)
+        if (!carry && !open(st)) state.remove()
+        else {
+          state.update(st)
+          if (idleMs > 0) state.setTimeoutDuration(idleMs)
+          else if (ttlMs > 0) state.setTimeoutDuration(ttlMs)
+        }
+        out.iterator
+      } else if (idleMs == 0) {
+        state.remove()
+        Iterator.empty
+      } else {
+        val prev = state.getOption
+        val (out, st) = step(prev, Iterator.empty, true)
+        if (carry && ttlMs == 0) state.update(st)
+        else if (carry && prev.exists(open)) {
+          state.update(st)
+          state.setTimeoutDuration(ttlMs)
+        } else state.remove()
+        out.iterator
+      }
+    val timeout =
+      if (idleMs > 0 || ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout
+      else GroupStateTimeout.NoTimeout
     df.groupByKey(r =>
-      keyIdx.map(i => if (r.isNullAt(i)) KEYNULL else String.valueOf(r.get(i))).mkString(KEYSEP))(Encoders.STRING)
+        keyIdx.map(i => if (r.isNullAt(i)) KEYNULL else String.valueOf(r.get(i))).mkString(KEYSEP))(
+        Encoders.STRING)
+      .flatMapGroupsWithState(OutputMode.Append, timeout)(fn)(stateEnc, Encoders.row(outSchema))
   }
 
   private def singleRowCtx(m: Map[String, Any]): RowEval.Ctx =
@@ -140,36 +207,43 @@ object StatefulOps extends Serializable {
     }
   }
 
-  /** Schemas shared by the window-result operators ([[countingWindow]],
+  /** Result rows of the window operators ([[countingWindow]],
     * [[sessionWindowAnalytics]], [[tumblingWindowAnalytics]]): the window
-    * result (keys + slot columns + `__wstart`/`__wend`), and the output,
-    * which appends one column per cross-window analytic call. The calls'
-    * aggregate arguments are already rewritten to slot idents, so a
-    * value-typed analytic takes its type from the window-result row. */
-  private def windowResultSchemas(
+    * result (keys + slot columns + `__wstart`/`__wend`), then one column
+    * per cross-window analytic call. The calls' aggregate arguments are
+    * already rewritten to slot idents, so they evaluate against the
+    * window-result row, and a value-typed analytic takes its type from it. */
+  private final class WindowRows(
       schema: StructType,
       keyNames: List[String],
       slots: List[(FuncCall, String)],
-      anCalls: List[(FuncCall, String)]): (StructType, StructType) = {
-    val resultSchema = StructType(
+      anCalls: List[(FuncCall, String)]) extends Serializable {
+    private val resultSchema = StructType(
       keyNames.map(k => schema(k)) ++
         slots.map { case (fc, sn) => StructField(sn, aggType(fc, schema), nullable = true) } ++
         List(StructField("__wstart", LongType), StructField("__wend", LongType)))
-    def anType(fc: FuncCall): DataType = fc.lname match {
-      case "had_changed" => BooleanType
-      case "acc_count" => LongType
-      case acc if acc.startsWith("acc_") => DoubleType
-      case n if graft.functions.FunctionMap.isCustomAnalytic(n) =>
-        graft.functions.FunctionMap.customAnalyticResultType(n).getOrElse(DoubleType)
-      case _ =>
-        fc.args.collectFirst {
-          case Ident(segs) if resultSchema.fieldNames.contains(segs.head.name) =>
-            resultSchema(segs.head.name).dataType
-        }.getOrElse(DoubleType)
+    val outSchema: StructType = StructType(resultSchema.fields ++
+      anCalls.map { case (fc, an) =>
+        StructField(an, analyticType(fc, resultSchema), nullable = true) })
+    private val customReg = customSnapshot()
+
+    /** The row of one closed window [ws, we) holding `buf` (event order);
+      * the analytics across windows advance the key's `states`. */
+    def emit(buf: Seq[Map[String, Any]], ws: Long, we: Long,
+        states: mutable.Map[String, AnState]): Row = {
+      val keyVals = keyNames.map(buf.head(_))
+      val resMap: Map[String, Any] =
+        keyNames.zip(keyVals).toMap ++
+          slots.map { case (fc, sn) => sn -> aggValue(fc, buf) }.toMap +
+          ("__wstart" -> ws) + ("__wend" -> we)
+      val anVals = anCalls.map { case (fc, an) =>
+        val st = states.getOrElseUpdate(an, AnState())
+        coerce(applyAnalytic(fc, st, resMap, customReg), outSchema(an).dataType)
+      }
+      Row.fromSeq(keyVals ++
+        slots.map { case (_, sn) => coerce(resMap(sn), resultSchema(sn).dataType) } ++
+        Seq(ws, we) ++ anVals)
     }
-    val outSchema = StructType(resultSchema.fields ++
-      anCalls.map { case (fc, an) => StructField(an, anType(fc), nullable = true) })
-    (resultSchema, outSchema)
   }
 
   private def aggValue(fc: FuncCall, rows: Seq[Map[String, Any]]): Any = {
@@ -183,14 +257,14 @@ object StatefulOps extends Serializable {
 
   // ------------------------------------------------- counting window
 
-  /** CountingWindow(n) per group key: buffer rows, fire every n
+  /** Streaming CountingWindow(n) per group key: buffer rows, fire every n
     * (reference: window/counting_window.go — per-key buffers; STATETTL reaps
-    * idle keys → streaming uses ProcessingTimeTimeout when ttlMs > 0).
+    * idle keys). Batch counting windows lower declaratively (PlanBuilder).
     *
     * Input df must carry materialized key columns (`keyNames`) and an
     * epoch-ms order column (`ordName`). Output: keys + slot columns +
     * `__wstart`/`__wend` (min/max event time — the batch analog of the
-    * reference's trigger timestamps).
+    * reference's trigger timestamps) + the cross-window analytics.
     */
   def countingWindow(
       df: DataFrame,
@@ -201,83 +275,26 @@ object StatefulOps extends Serializable {
       ttlMs: Long = 0L,
       tieName: Option[String] = None,
       anCalls: List[(FuncCall, String)] = Nil): DataFrame = {
-
-    val schema = df.schema
-    val names = schema.fieldNames
-    val (resultSchema, outSchema) =
-      windowResultSchemas(schema, keyNames, slots, anCalls)
+    val names = df.schema.fieldNames
+    val rows = new WindowRows(df.schema, keyNames, slots, anCalls)
 
     // analytics across successive windows share per-key state (reference:
     // stream/stream.go:574-615); counting windows fire in event order per
     // key, so applying them at emit time matches the reference's order
-    val customReg = customSnapshot()
-    def emit(buf: Seq[Map[String, Any]],
-        states: scala.collection.mutable.Map[String, AnState]): Row = {
-      val keyVals = keyNames.map(buf.head(_))
-      val ws = RowEval.toMillis(buf.head(ordName))
-      val we = RowEval.toMillis(buf.last(ordName))
-      val resMap: Map[String, Any] =
-        keyNames.zip(keyVals).toMap ++
-          slots.map { case (fc, sn) => sn -> aggValue(fc, buf) }.toMap +
-          ("__wstart" -> ws) + ("__wend" -> we)
-      val anVals = anCalls.map { case (fc, an) =>
-        val st = states.getOrElseUpdate(an, AnState())
-        coerce(applyAnalytic(fc, st, resMap, customReg), outSchema(an).dataType)
-      }
-      Row.fromSeq(keyVals ++
-        slots.map { case (_, sn) => coerce(resMap(sn), resultSchema(sn).dataType) } ++
-        Seq(ws, we) ++ anVals)
-    }
-
-    val grouped = byKeyString(df, keyNames)
-
     type CState = (Vector[Map[String, Any]], Map[String, AnState])
-    if (df.isStreaming) {
-      val fn = (_: String, it: Iterator[Row], state: GroupState[CState]) => {
-        if (state.hasTimedOut) {
-          // STATETTL reaps the idle key's state — partial buffer AND
-          // analytic state discarded (reference: counting_window.go:254-267);
-          // no re-arm, or a quiet stream busy-loops on timeout batches
-          state.remove()
-          Iterator.empty
-        } else {
-        val incoming = it.map(r => rowToMap(names, r)).toVector
-          .sortWith(ordLess(_, _, ordName, tieName))
-        val st = state.getOption.getOrElse((Vector.empty[Map[String, Any]], Map.empty[String, AnState]))
-        var buf = st._1 ++ incoming
-        val states = scala.collection.mutable.Map[String, AnState]() ++ st._2
-        val out = Vector.newBuilder[Row]
-        while (buf.size >= n) {
-          out += emit(buf.take(n), states)
-          buf = buf.drop(n)
-        }
-        if (buf.isEmpty && states.isEmpty) state.remove()
-        else {
-          state.update((buf, states.toMap))
-          if (ttlMs > 0) state.setTimeoutDuration(ttlMs)
-        }
-        out.result().iterator
-        }
+    runKeyed[CState](df, keyNames, rows.outSchema, Encoders.kryo[CState],
+        ttlMs = ttlMs, carry = anCalls.nonEmpty, open = _._1.nonEmpty) { (prev, it, _) =>
+      val incoming = toMaps(names, it).sortWith(ordLess(_, _, ordName, tieName))
+      var buf = prev.fold(Vector.empty[Map[String, Any]])(_._1) ++ incoming
+      val states = mutable.Map[String, AnState]() ++ prev.fold(Map.empty[String, AnState])(_._2)
+      val out = Vector.newBuilder[Row]
+      while (buf.size >= n) {
+        val win = buf.take(n)
+        out += rows.emit(win, RowEval.toMillis(win.head(ordName)),
+          RowEval.toMillis(win.last(ordName)), states)
+        buf = buf.drop(n)
       }
-      val timeout =
-        if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout else GroupStateTimeout.NoTimeout
-      grouped.flatMapGroupsWithState(OutputMode.Append, timeout)(fn)(
-        Encoders.kryo[CState], Encoders.row(outSchema))
-    } else {
-      perKeySortedBatch(df, keyNames, ordName, tieName, outSchema) { () =>
-        var buf = Vector.empty[Map[String, Any]]
-        val states = scala.collection.mutable.Map[String, AnState]()
-        val onRow = (m: Map[String, Any]) => {
-          buf :+= m
-          if (buf.size == n) {
-            val out = emit(buf, states); buf = Vector.empty
-            Iterator.single(out)
-          } else Iterator.empty[Row]
-        }
-        // trailing partial window is dropped (reference: counting windows
-        // fire only on full counts)
-        (onRow, () => Iterator.empty[Row])
-      }
+      (out.result(), (buf, states.toMap))
     }
   }
 
@@ -319,8 +336,7 @@ object StatefulOps extends Serializable {
 
     type GState = (Map[String, RowAgg.Running], Long) // accumulators, window-start ms
 
-    def process(stateIn: Option[(Map[String, RowAgg.Running], Long)],
-        rows: Seq[Map[String, Any]]): (Vector[Row], Option[(Map[String, RowAgg.Running], Long)]) = {
+    def process(stateIn: Option[GState], rows: Seq[Map[String, Any]]): (Vector[Row], GState) = {
       var accs = stateIn.map(_._1).getOrElse(
         slots.map { case (fc, sn) => sn -> RowAgg.Running() }.toMap)
       var wstart = stateIn.map(_._2).getOrElse(-1L)
@@ -348,41 +364,32 @@ object StatefulOps extends Serializable {
           wstart = -1L
         }
       }
-      (out.result(), Some((accs, wstart)))
+      (out.result(), (accs, wstart))
     }
 
-    val grouped = byKeyString(df, keyNames)
-
-    if (df.isStreaming) {
-      val fn = (_: String, it: Iterator[Row], state: GroupState[GState]) => {
-        val rows = it.map(r => rowToMap(names, r)).toVector
-          .sortWith(ordLess(_, _, ordName, tieName))
-        val (out, st) = process(state.getOption, rows)
-        st.foreach(state.update)
-        out.iterator
+    if (df.isStreaming)
+      runKeyed[GState](df, keyNames, outSchema, Encoders.kryo[GState]) { (prev, it, _) =>
+        process(prev, toMaps(names, it).sortWith(ordLess(_, _, ordName, tieName)))
       }
-      grouped.flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fn)(
-        Encoders.kryo[GState], Encoders.row(outSchema))
-    } else {
+    else
       perKeySortedBatch(df, keyNames, ordName, tieName, outSchema) { () =>
         var st: Option[GState] = None
         val onRow = (m: Map[String, Any]) => {
           val (out, st2) = process(st, Seq(m))
-          st = st2
+          st = Some(st2)
           out.iterator
         }
         (onRow, () => Iterator.empty[Row])
       }
-    }
   }
 
   // ------------------------------------------------ streaming analytics
 
   /** Analytic state per call (reference: stream/analytic.go state machines +
-    * functions/functions_analytical.go). Streaming [[analytics]] /
-    * [[analyticsTws]] keep it between micro-batches as [[AnStateCodec]]
-    * bytes, which hold only the fields the call's kind reads; the window
-    * paths ([[countingWindow]], [[sessionWindowAnalytics]],
+    * functions/functions_analytical.go). Streaming [[analytics]] keeps it
+    * between micro-batches as [[AnStateCodec]] bytes, which hold only the
+    * fields the call's kind reads; the window operators
+    * ([[countingWindow]], [[sessionWindowAnalytics]],
     * [[tumblingWindowAnalytics]]) keep it by call name inside their
     * kryo-encoded state. */
   private[streaming] final case class AnState(
@@ -404,7 +411,7 @@ object StatefulOps extends Serializable {
   /** One window-result or event row through one analytic state machine
     * (WHEN gating replays the last result — stream/analytic.go:142-148).
     * Shared by the direct-path analytics and the window-path analytics
-    * (tumblingWindowAnalytics). */
+    * ([[WindowRows]]). */
   private def applyAnalytic(fc: FuncCall, st: AnState, m: Map[String, Any],
       custom: Map[String, () => graft.functions.CustomAnalytic]): Any = {
     val gate = fc.over.flatMap(_.when).forall(c => RowEval.truthy(evalOn(m, c)))
@@ -477,7 +484,7 @@ object StatefulOps extends Serializable {
 
 
   /** The direct-path analytics of one query: its output schema and the
-    * per-key step both streaming lowerings run, with the per-call states
+    * per-key step the streaming lowering runs, with the per-call states
     * kept between micro-batches as [[AnStateCodec]] bytes. */
   private[streaming] final class DirectAnalytics(
       schema: StructType, calls: List[(FuncCall, String)],
@@ -508,11 +515,13 @@ object StatefulOps extends Serializable {
     }
   }
 
-  /** Streaming lowering of the direct-path analytics. All calls must share
-    * one partition spec (the reference keeps independent per-call state;
-    * a shared groupByKey keeps this a single shuffle).
-    * Output = input columns + one column per call. Each key's state is
-    * one [[AnBytes]] value (see [[AnStateCodec]] for the layout). */
+  /** Direct-path analytics: streaming keeps each key's state as one
+    * [[AnBytes]] value (see [[AnStateCodec]] for the layout); batch (taken
+    * only for user analytics, which have no declarative lowering) runs the
+    * same calls over the sorted keys. All calls must share one partition
+    * spec (the reference keeps independent per-call state; a shared
+    * grouping keeps this a single shuffle).
+    * Output = input columns + one column per call. */
   def analytics(
       df: DataFrame,
       calls: List[(FuncCall, String)],
@@ -521,81 +530,19 @@ object StatefulOps extends Serializable {
       tieName: Option[String] = None,
       ttlMs: Long = 0L): DataFrame = {
     val an = new DirectAnalytics(df.schema, calls, ordName, tieName)
-    if (df.isStreaming) {
-      val fn = (_: String, it: Iterator[Row], state: GroupState[AnBytes]) => {
-        if (state.hasTimedOut) {
-          // STATETTL reaps the idle key's analytic state wholesale
-          // (reference: LRU partition eviction, stream/analytic.go:18-21)
-          state.remove()
-          Iterator.empty
-        } else {
-          val (out, next) = an.step(state.getOption, it)
-          state.update(next)
-          if (ttlMs > 0) state.setTimeoutDuration(ttlMs)
-          out.iterator
-        }
-      }
-      val timeout =
-        if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout
-        else GroupStateTimeout.NoTimeout
-      byKeyString(df, partitionNames).flatMapGroupsWithState(OutputMode.Append, timeout)(fn)(
-        Encoders.product[AnBytes], Encoders.row(an.outSchema))
-    } else {
+    if (df.isStreaming)
+      runKeyed[AnBytes](df, partitionNames, an.outSchema, Encoders.product[AnBytes],
+        ttlMs = ttlMs)((prev, it, _) => an.step(prev, it))
+    else
       perKeySortedBatch(df, partitionNames, ordName, tieName, an.outSchema) { () =>
         val states = an.codec.fresh()
         ((m: Map[String, Any]) => an.run(states, Iterator.single(m)),
           () => Iterator.empty[Row])
       }
-    }
   }
 
-  /** [[analytics]] on Spark 4's `transformWithState` (STATEOP='tws'):
-    * the same per-key step and state bytes hosted in a
-    * [[org.apache.spark.sql.streaming.StatefulProcessor]], with the
-    * state-store-native TTL (`TTLConfig`) doing the idle-key reaping the
-    * reference implements as LRU eviction
-    * (reference: stream/analytic.go:18-21,386-394). Requires the RocksDB
-    * state-store provider (`StreamSql.useRocksDBStateStore()`). */
-  def analyticsTws(
-      df: DataFrame,
-      calls: List[(FuncCall, String)],
-      partitionNames: List[String],
-      ordName: String,
-      tieName: Option[String] = None,
-      ttlMs: Long = 0L): DataFrame = {
-    import org.apache.spark.sql.streaming.{StatefulProcessor, TimeMode, TTLConfig, ValueState}
-
-    val an = new DirectAnalytics(df.schema, calls, ordName, tieName)
-
-    final class AnalyticsProcessor extends StatefulProcessor[String, Row, Row] {
-      @transient private var anState: ValueState[AnBytes] = _
-
-      override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-        val ttl =
-          if (ttlMs > 0) new TTLConfig(java.time.Duration.ofMillis(ttlMs))
-          else TTLConfig.NONE
-        anState = getHandle.getValueState[AnBytes]("an", Encoders.product[AnBytes], ttl)
-      }
-
-      override def handleInputRows(
-          key: String, inputRows: Iterator[Row],
-          timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[Row] = {
-        val (out, next) = an.step(Option.when(anState.exists())(anState.get()), inputRows)
-        anState.update(next)
-        out.iterator
-      }
-    }
-
-    // state TTL is only legal under ProcessingTime time mode (Spark rejects
-    // TTLConfig with TimeMode.None at query start)
-    val timeMode = if (ttlMs > 0) TimeMode.ProcessingTime() else TimeMode.None()
-    byKeyString(df, partitionNames)
-      .transformWithState(new AnalyticsProcessor, timeMode, OutputMode.Append())(
-        Encoders.row(an.outSchema))
-  }
-
-  /** Output type of a direct-path analytic call (shared by the fMGWS and
-    * transformWithState lowerings). */
+  /** Output type of an analytic call over rows of `schema`: the input row
+    * for direct-path analytics, the window result for window-path ones. */
   private def analyticType(fc: FuncCall, schema: StructType): DataType = fc.lname match {
     case "had_changed" => BooleanType
     case "acc_count" => LongType
@@ -605,13 +552,9 @@ object StatefulOps extends Serializable {
       // through toDouble) — never silently truncate to an int column type
       graft.functions.FunctionMap.customAnalyticResultType(n).getOrElse(DoubleType)
     case _ =>
-      val colArg = fc.args.find {
-        case _: Ident => true
-        case _ => false
-      }
-      colArg.flatMap {
-        case Ident(segs) => schema.fields.find(_.name == segs.head.name).map(_.dataType)
-        case _ => None
+      fc.args.collectFirst {
+        case Ident(segs) if schema.fieldNames.contains(segs.head.name) =>
+          schema(segs.head.name).dataType
       }.getOrElse(DoubleType)
   }
 
@@ -647,13 +590,9 @@ object StatefulOps extends Serializable {
       tieName: Option[String] = None,
       idleMs: Long = 0L,
       ttlMs: Long = 0L): DataFrame = {
+    val names = df.schema.fieldNames
+    val rows = new WindowRows(df.schema, keyNames, slots, anCalls)
 
-    val schema = df.schema
-    val names = schema.fieldNames
-    val (resultSchema, outSchema) =
-      windowResultSchemas(schema, keyNames, slots, anCalls)
-
-    val customReg = customSnapshot()
     def process(stIn: Option[SessState], incoming: Vector[Map[String, Any]],
         closeAll: Boolean): (Vector[Row], SessState) = {
       val st = stIn.getOrElse(SessState(Vector.empty, Long.MinValue, Map.empty, Long.MinValue))
@@ -676,91 +615,21 @@ object StatefulOps extends Serializable {
         }
       }
       val wm = if (closeAll) Long.MaxValue else maxTs - oooMs
-      val states = scala.collection.mutable.Map[String, AnState]() ++ st.an
+      val states = mutable.Map[String, AnState]() ++ st.an
       val out = Vector.newBuilder[Row]
       var horizon = st.horizon
       val (toClose, open) = sessions.partition { case (_, e0, _) => e0 + gapMs <= wm }
-      toClose.sortBy(_._1).foreach { case (s0, e0, rows) =>
-        val buf = rows.sortWith(ordLess(_, _, ordName, tieName))
-        val keyVals = keyNames.map(buf.head(_))
+      toClose.sortBy(_._1).foreach { case (s0, e0, buf) =>
         val we = e0 + gapMs
-        val resMap: Map[String, Any] =
-          keyNames.zip(keyVals).toMap ++
-            slots.map { case (fc, sn) => sn -> aggValue(fc, buf) }.toMap +
-            ("__wstart" -> s0) + ("__wend" -> we)
-        val anVals = anCalls.map { case (fc, an) =>
-          val ast = states.getOrElseUpdate(an, AnState())
-          coerce(applyAnalytic(fc, ast, resMap, customReg), outSchema(an).dataType)
-        }
-        out += Row.fromSeq(keyVals ++
-          slots.map { case (_, sn) => coerce(resMap(sn), resultSchema(sn).dataType) } ++
-          Seq(s0, we) ++ anVals)
+        out += rows.emit(buf.sortWith(ordLess(_, _, ordName, tieName)), s0, we, states)
         horizon = math.max(horizon, we)
       }
       (out.result(), SessState(open, maxTs, states.toMap, horizon))
     }
 
-    val grouped = byKeyString(df, keyNames)
-
-    if (df.isStreaming) {
-      val fn = (_: String, it: Iterator[Row], state: GroupState[SessState]) => {
-        if (state.hasTimedOut) {
-          // IDLETIMEOUT flushes open sessions on processing time
-          // (reference: window/watermark.go:108-124). What remains after the
-          // flush: cross-window analytic state is RETAINED (IDLETIMEOUT only
-          // closes windows, it is not a reap) unless STATETTL explicitly
-          // opts into reaping (reference: counting_window.go:254-267); keys
-          // with no analytic state are dropped (nothing worth keeping —
-          // reaped keys see later rows as a fresh stream, exactly like the
-          // reference after state eviction).
-          val stIn = state.getOption
-          val hadOpen = stIn.exists(_.sessions.nonEmpty)
-          val (out, stOut) = process(stIn, Vector.empty, closeAll = idleMs > 0)
-          if (anCalls.nonEmpty && ttlMs == 0) state.update(stOut)
-          else if (anCalls.nonEmpty && idleMs > 0 && hadOpen) {
-            // idle flush emitted something — reap on the next TTL expiry
-            state.update(stOut)
-            state.setTimeoutDuration(ttlMs)
-          } else state.remove() // pure-TTL reap discards partials wholesale
-          out.iterator
-        } else {
-          val rows = it.map(r => rowToMap(names, r)).toVector
-          val (out, stOut) = process(state.getOption, rows, closeAll = false)
-          // a key whose sessions have fully flushed and that carries no
-          // cross-window analytic state holds nothing worth keeping —
-          // drop it so high-cardinality ephemeral keys don't accrete
-          // (trade-off: the per-key lateness horizon goes with it, so a
-          // row arriving later than the key's whole flushed history starts
-          // a fresh stream — the reference behaves the same once STATETTL/
-          // LRU eviction reaps a key)
-          if (stOut.sessions.isEmpty && anCalls.isEmpty) state.remove()
-          else {
-            state.update(stOut)
-            if (idleMs > 0) state.setTimeoutDuration(idleMs)
-            else if (ttlMs > 0) state.setTimeoutDuration(ttlMs)
-          }
-          out.iterator
-        }
-      }
-      val timeout =
-        if (idleMs > 0 || ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout
-        else GroupStateTimeout.NoTimeout
-      grouped.flatMapGroupsWithState(OutputMode.Append, timeout)(fn)(
-        Encoders.kryo[SessState], Encoders.row(outSchema))
-    } else {
-      // sorted input closes sessions incrementally in the same order the
-      // whole-key pass would (disjoint sessions close in s0 order; a
-      // closed session can never receive a later sorted row), so per-key
-      // heap holds only the open sessions, not the key's full history
-      perKeySortedBatch(df, keyNames, ordName, tieName, outSchema) { () =>
-        var st: Option[SessState] = None
-        val onRow = (m: Map[String, Any]) => {
-          val (out, st2) = process(st, Vector(m), closeAll = false)
-          st = Some(st2)
-          out.iterator
-        }
-        (onRow, () => process(st, Vector.empty, closeAll = true)._1.iterator)
-      }
+    runKeyed[SessState](df, keyNames, rows.outSchema, Encoders.kryo[SessState],
+        idleMs, ttlMs, carry = anCalls.nonEmpty, open = _.sessions.nonEmpty) {
+      (prev, it, closeAll) => process(prev, toMaps(names, it), closeAll)
     }
   }
 
@@ -801,14 +670,9 @@ object StatefulOps extends Serializable {
       idleMs: Long = 0L,
       ttlMs: Long = 0L): DataFrame = {
     val slide = if (slideMs > 0) slideMs else sizeMs
+    val names = df.schema.fieldNames
+    val rows = new WindowRows(df.schema, keyNames, slots, anCalls)
 
-    val schema = df.schema
-    val names = schema.fieldNames
-
-    val (resultSchema, outSchema) =
-      windowResultSchemas(schema, keyNames, slots, anCalls)
-
-    val customReg = customSnapshot()
     def process(stIn: Option[TwState], incoming: Vector[Map[String, Any]],
         closeAll: Boolean): (Vector[Row], TwState) = {
       val st = stIn.getOrElse(TwState(Map.empty, Long.MinValue, Map.empty, Long.MinValue))
@@ -830,87 +694,22 @@ object StatefulOps extends Serializable {
         }
       }
 
-      val states = scala.collection.mutable.Map[String, AnState]() ++ st.an
+      val states = mutable.Map[String, AnState]() ++ st.an
       val out = Vector.newBuilder[Row]
       var horizon = st.horizon
       val toClose = bufs.keys.filter(ws => ws + sizeMs <= wm).toList.sorted
       toClose.foreach { ws =>
-        val buf = bufs(ws).sortWith(ordLess(_, _, ordName, tieName))
-        val keyVals = keyNames.map(buf.head(_))
-        val resMap: Map[String, Any] =
-          keyNames.zip(keyVals).toMap ++
-            slots.map { case (fc, sn) => sn -> aggValue(fc, buf) }.toMap +
-            ("__wstart" -> ws) + ("__wend" -> (ws + sizeMs))
-        val anVals = anCalls.map { case (fc, n) =>
-          val s = states.getOrElseUpdate(n, AnState())
-          coerce(applyAnalytic(fc, s, resMap, customReg), outSchema(n).dataType)
-        }
-        out += Row.fromSeq(keyVals ++
-          slots.map { case (_, sn) => coerce(resMap(sn), resultSchema(sn).dataType) } ++
-          Seq(ws, ws + sizeMs) ++ anVals)
+        out += rows.emit(bufs(ws).sortWith(ordLess(_, _, ordName, tieName)),
+          ws, ws + sizeMs, states)
         bufs -= ws
         horizon = math.max(horizon, ws + slide)
       }
       (out.result(), TwState(bufs, maxTs, states.toMap, horizon))
     }
 
-    val grouped = byKeyString(df, keyNames)
-
-    if (df.isStreaming) {
-      val fn = (_: String, it: Iterator[Row], state: GroupState[TwState]) => {
-        if (state.hasTimedOut) {
-          // IDLETIMEOUT (reference: window/watermark.go:108-124) flushes all
-          // open windows on processing time. Cross-window analytic state is
-          // RETAINED after the flush (IDLETIMEOUT is not a reap) unless
-          // STATETTL explicitly opts into reaping (reference:
-          // counting_window.go:254-267); keys with no analytic state drop —
-          // later rows on a reaped key start a fresh stream, exactly like
-          // the reference after state eviction.
-          val stIn = state.getOption
-          val hadOpen = stIn.exists(_.buffers.nonEmpty)
-          val (out, st) = process(stIn, Vector.empty, closeAll = idleMs > 0)
-          if (anCalls.nonEmpty && ttlMs == 0) state.update(st)
-          else if (anCalls.nonEmpty && idleMs > 0 && hadOpen) {
-            // idle flush emitted something — reap on the next TTL expiry
-            state.update(st)
-            state.setTimeoutDuration(ttlMs)
-          } else state.remove() // pure-TTL reap discards partials wholesale
-          out.iterator
-        } else {
-          val rows = it.map(r => rowToMap(names, r)).toVector
-          val (out, st) = process(state.getOption, rows, closeAll = false)
-          // drop fully-flushed keys with no analytic state — otherwise
-          // high-cardinality ephemeral keys retain (maxTs, horizon) forever
-          // (trade-off: the per-key lateness horizon goes with it — rows
-          // later than the key's flushed history start a fresh stream, the
-          // reference's own post-eviction behavior)
-          if (st.buffers.isEmpty && anCalls.isEmpty) state.remove()
-          else {
-            state.update(st)
-            if (idleMs > 0) state.setTimeoutDuration(idleMs)
-            else if (ttlMs > 0) state.setTimeoutDuration(ttlMs)
-          }
-          out.iterator
-        }
-      }
-      val timeout =
-        if (idleMs > 0 || ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout
-        else GroupStateTimeout.NoTimeout
-      grouped.flatMapGroupsWithState(OutputMode.Append, timeout)(fn)(
-        Encoders.kryo[TwState], Encoders.row(outSchema))
-    } else {
-      // same incremental argument as sessionWindowAnalytics: sorted input
-      // finalizes windows in start order, a closed window can never
-      // receive a later sorted row — per-key heap = open windows only
-      perKeySortedBatch(df, keyNames, ordName, tieName, outSchema) { () =>
-        var st: Option[TwState] = None
-        val onRow = (m: Map[String, Any]) => {
-          val (out, st2) = process(st, Vector(m), closeAll = false)
-          st = Some(st2)
-          out.iterator
-        }
-        (onRow, () => process(st, Vector.empty, closeAll = true)._1.iterator)
-      }
+    runKeyed[TwState](df, keyNames, rows.outSchema, Encoders.kryo[TwState],
+        idleMs, ttlMs, carry = anCalls.nonEmpty, open = _.buffers.nonEmpty) {
+      (prev, it, closeAll) => process(prev, toMaps(names, it), closeAll)
     }
   }
 }

@@ -29,6 +29,21 @@ class ParserSpec extends AnyFunSuite {
     assert(q.options == Map("TIMESTAMP" -> "ts", "TIMEUNIT" -> "ms"))
   }
 
+  test("WITH rejects unknown option keys, naming the key and the seven it accepts") {
+    val keys = Seq("TIMESTAMP", "TIMEUNIT", "TIEBREAK", "MAXOUTOFORDERNESS",
+      "ALLOWEDLATENESS", "IDLETIMEOUT", "STATETTL")
+    for (bad <- Seq("STATETL='1h'", "STATEOP='tws'")) {
+      val e = intercept[ParseException](Parser.parse(
+        "SELECT deviceId, lag(temperature) OVER (PARTITION BY deviceId) AS p " +
+          s"FROM stream WITH (TIMESTAMP='ts', $bad)"))
+      val key = bad.takeWhile(_ != '=')
+      assert(e.getMessage.contains(s"'$key'"), e.getMessage)
+      keys.foreach(k => assert(e.getMessage.contains(k), e.getMessage))
+    }
+    val all = keys.map(k => s"$k='1s'").mkString(", ")
+    assert(Parser.parse(s"SELECT a FROM stream WITH ($all)").options.keySet == keys.toSet)
+  }
+
   test("sliding, session, counting, global windows") {
     assert(Parser.parse("SELECT count(*) AS c FROM stream GROUP BY SlidingWindow('10s','2s')")
       .window.contains(SlidingWindow(10000, 2000)))

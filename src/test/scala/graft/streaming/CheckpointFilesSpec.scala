@@ -199,6 +199,49 @@ class CheckpointFilesSpec extends AnyFunSuite {
     assert(out.size == 2, "no row may come from the old state")
   }
 
+  // window-path state (buffered rows plus the cross-window analytic state)
+  // across a restart: the query stops after batch 2 and restarts on the
+  // same checkpoint, and must emit exactly what one uninterrupted run does
+  for ((shape, sql) <- Seq(
+      "a counting window with a cross-window acc_sum" ->
+        ("SELECT deviceId, sum(temperature) AS s, acc_sum(sum(temperature)) AS run " +
+          "FROM stream GROUP BY deviceId, CountingWindow(2) " +
+          "WITH (TIMESTAMP='ts', TIMEUNIT='ms')"),
+      "a tumbling window with cross-window analytics" ->
+        ("SELECT deviceId, window_start() AS ws, sum(temperature) AS s, " +
+          "acc_sum(sum(temperature)) AS run, lag(sum(temperature)) AS prev " +
+          "FROM stream GROUP BY deviceId, TumblingWindow('2s') " +
+          "WITH (TIMESTAMP='ts', TIMEUNIT='ms', MAXOUTOFORDERNESS='0s')")))
+    test(s"$shape restarts from its checkpoint as if uninterrupted") {
+      implicit val ctx = spark.sqlContext
+      // three rows per key per batch, so windows straddle the batches
+      val batches = (0 until 5).map(b => (0 until 9).map(i =>
+        Ev(s"d${i % 3}", (b * 9 + i) % 11, b * 1500L + i * 100, "a")))
+      def run(stopAfter: Set[Int]): Seq[Seq[Any]] = {
+        val mem = MemoryStream[Ev]
+        val df = GraftEngine.sql(sql, mem.toDF())
+        val ckpt = tempDir()
+        val out = ArrayBuffer[Seq[Any]]()
+        def startRows(): StreamingQuery = df.writeStream.foreachBatch { (b: DataFrame, _: Long) =>
+          val rows = b.collect().map(_.toSeq)
+          out.synchronized(out ++= rows)
+          ()
+        }.option("checkpointLocation", ckpt).start()
+        var q = startRows()
+        try batches.zipWithIndex.foreach { case (evs, b) =>
+          mem.addData(evs: _*)
+          q.processAllAvailable()
+          if (stopAfter(b)) { SparkTestBase.stopQuietly(q); q = startRows() }
+        } finally SparkTestBase.stopQuietly(q)
+        out.toSeq
+      }
+      val whole = run(Set.empty)
+      assert(whole.nonEmpty)
+      val restarted = run(Set(2))
+      def sorted(rows: Seq[Seq[Any]]) = rows.map(_.mkString("|")).sorted
+      assert(sorted(restarted) == sorted(whole))
+    }
+
   test("the committed checkpoint file set matches the stock filesystem's") {
     val uuid = "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}".r
     def files(root: String): Set[String] = {

@@ -15,7 +15,7 @@ import graft.{GraftEngine, SparkTestBase}
   *
   * With processing-time timeouts armed the engine schedules micro-batches
   * on its own to fire timers, and `processAllAvailable` never returns
-  * (same caveat as the tws STATETTL spec) — so this spec POLLS the query
+  * (as for every STATETTL or IDLETIMEOUT query) — so this spec POLLS the query
   * progress; the timer-driven batches are themselves the "many
   * micro-batches" of the soak.
   */

@@ -426,73 +426,6 @@ class StreamingSpec extends AnyFunSuite {
       ("d1", 10.0, 10.0), ("d1", 30.0, 30.0), ("d1", 20.0, 30.0), ("d2", 5.0, 5.0)))
   }
 
-  test("STATEOP='tws' runs streaming analytics on transformWithState") {
-    // transformWithState (Spark 4 stateful operator) requires the RocksDB
-    // state-store provider; state carries across micro-batches like fMGWS
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    graft.api.StreamSql(spark).useRocksDBStateStore()
-    try {
-      val rows = Seq(
-        Ev("d1", 10, 1000, "a"), Ev("d2", 5, 1500, "a"),
-        Ev("d1", 20, 2000, "a"), Ev("d1", 30, 3000, "a"), Ev("d2", 7, 2500, "a"))
-      val out = runStream(
-        "SELECT deviceId, temperature, lag(temperature) " +
-          "OVER (PARTITION BY deviceId) AS prev, " +
-          "acc_sum(temperature) OVER (PARTITION BY deviceId) AS rs FROM stream " +
-          "WITH (TIMESTAMP='ts', TIMEUNIT='ms', STATEOP='tws')",
-        rows, batches = 3)
-      val got = out.collect()
-        .map(r => (r.getString(0), r.getDouble(1),
-          Option(r.get(2)).map(_.asInstanceOf[Double]), r.getDouble(3))).toSet
-      assert(got == Set(
-        ("d1", 10.0, None, 10.0), ("d1", 20.0, Some(10.0), 30.0),
-        ("d1", 30.0, Some(20.0), 60.0),
-        ("d2", 5.0, None, 5.0), ("d2", 7.0, Some(5.0), 12.0)))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
-  test("STATEOP='tws' with STATETTL starts and runs (ProcessingTime time mode)") {
-    // TTL-enabled TWS state is only legal under TimeMode.ProcessingTime —
-    // this pins that the query STARTS (TimeMode.None + TTLConfig throws at
-    // query start) and produces results. With processing-time timers armed
-    // processAllAvailable never returns, so the test polls the sink.
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    graft.api.StreamSql(spark).useRocksDBStateStore()
-    try {
-      implicit val sqlCtx = spark.sqlContext
-      val mem = MemoryStream[Ev]
-      val out = GraftEngine.sql(
-        "SELECT deviceId, temperature, lag(temperature) " +
-          "OVER (PARTITION BY deviceId) AS prev FROM stream " +
-          "WITH (TIMESTAMP='ts', TIMEUNIT='ms', STATEOP='tws', STATETTL='1h')",
-        Map("stream" -> mem.toDF()))
-      val query = out.writeStream.format("memory").queryName("twsttl")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime(250L))
-        .start()
-      mem.addData(Ev("d1", 10, 1000L, "a"), Ev("d1", 20, 2000L, "a"))
-      val deadline = System.currentTimeMillis() + 30000
-      var got: Seq[(Double, Option[Double])] = Nil
-      while (got.size < 2 && System.currentTimeMillis() < deadline) {
-        Thread.sleep(500)
-        got = spark.table("twsttl").collect()
-          .map(r => (r.getDouble(1), Option(r.get(2)).map(_.asInstanceOf[Double]))).toSeq
-      }
-      SparkTestBase.stopQuietly(query)
-      assert(got.toSet == Set((10.0, None), (20.0, Some(10.0))), s"got $got")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
   test("stateful operators hold 10k independent key partitions") {
     // the reference's capacity story is 100k+ device partitions in 128 MB
     // (README.md:21,187); state here distributes across the state store and
@@ -603,30 +536,6 @@ class StreamingSpec extends AnyFunSuite {
     assert(got.get(4000L).contains(4.0), s"window 4000: $got") // ts 5000
     assert(!got.values.exists(v => v == 8.0 || v == 9.0 || v == 11.0),
       s"late row leaked into a window: $got")
-  }
-
-  test("transformWithState analytics hold 10k independent key partitions") {
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    graft.api.StreamSql(spark).useRocksDBStateStore()
-    try {
-      val rows = (0 until 10000).flatMap { k =>
-        Seq(Ev(s"dev$k", 1, 1000L + k, "a"), Ev(s"dev$k", 2, 2000L + k, "a"))
-      }
-      val out = runStream(
-        "SELECT deviceId, temperature, lag(temperature) " +
-          "OVER (PARTITION BY deviceId) AS prev FROM stream " +
-          "WITH (TIMESTAMP='ts', TIMEUNIT='ms', STATEOP='tws')",
-        rows, batches = 2)
-      val got = out.collect()
-      assert(got.length == 20000)
-      // second event of every key sees the first through TWS state
-      assert(got.count(r => !r.isNullAt(2)) == 10000)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
   }
 
   test("tumbling-analytics operator holds 10k independent key partitions") {
